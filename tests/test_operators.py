@@ -493,6 +493,66 @@ def test_grouped_percentile_doubles_bit_equals_percentile_aggregate(spark):
             )
 
 
+def test_grouped_rank_values_keeps_null_group(spark):
+    """A NULL group key is a group of its own, as in percentile(): its
+    ranks match the sorted-index reference and its percentiles match the
+    aggregate's, bit for bit."""
+    import random
+    import struct
+
+    from wheels_in_motion_analytics_spark.operators.windows import (
+        grouped_percentile_doubles,
+        grouped_rank_values,
+    )
+    from wheels_in_motion_analytics_spark.tables import local_frame
+
+    rnd = random.Random(7)
+    rows = [
+        (rnd.choice(["A", "B", None]), rnd.randrange(-50_000, 50_000))
+        for _ in range(3000)
+    ] + [(None, None), ("B", None)]
+    df = local_frame(spark, rows, "g string, v bigint")
+
+    def want(n):
+        return [1, (n + 1) // 2, n]
+
+    got = grouped_rank_values(df, "g", "v", want, buckets=16)
+    ref: dict = {}
+    for g, v in rows:
+        if v is not None:
+            ref.setdefault(g, []).append(v)
+    assert set(got) == {"A", "B", None}
+    for g, vals in ref.items():
+        vals.sort()
+        n = len(vals)
+        assert got[g] == ({k: vals[k - 1] for k in want(n)}, n), g
+
+    cents = df.select("g", (F.col("v") / 100.0).alias("price"))
+    fracs = [0.1, 0.5, 0.9]
+    pct = grouped_percentile_doubles(cents, "g", "price", fracs)
+    agg = (
+        cents.groupBy("g")
+        .agg(F.expr("percentile(price, array(0.1, 0.5, 0.9))").alias("p"))
+        .collect()
+    )
+    assert set(pct) == {r["g"] for r in agg}
+    for r in agg:
+        for i in range(len(fracs)):
+            assert struct.pack("d", pct[r["g"]][i]) == struct.pack("d", r["p"][i]), (
+                r["g"], fracs[i],
+            )
+
+
+def test_grouped_rank_values_empty_input(spark):
+    from wheels_in_motion_analytics_spark.operators.windows import grouped_rank_values
+    from wheels_in_motion_analytics_spark.tables import local_frame
+
+    empty = local_frame(spark, [], "g string, v bigint")
+    assert grouped_rank_values(empty, "g", "v", lambda n: [1, n]) == {}
+    only_nulls = local_frame(spark, [("A", None), (None, None)], "g string, v bigint")
+    assert grouped_rank_values(only_nulls, "g", "v", lambda n: [1, n]) == {}
+
+
 def test_group_exact_percentiles_matches_window_rank_form(spark):
     """The r11 selection rewrite == the original group-partitioned window
     rank formulation (exact integers), on the real orders table."""

@@ -47,6 +47,7 @@ import pyspark.sql.functions as F
 
 from wheels_in_motion_analytics_spark.session import get_session
 from wheels_in_motion_analytics_spark.sources import cdc
+from wheels_in_motion_analytics_spark.tables import local_frame
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 ROOT = "/tmp/sf1probe_cdc"
@@ -127,7 +128,7 @@ def probe_partitioned(spark, sf_dir: str) -> dict:
         "order_month"
     ).parquet(data_path)
     seed_s = time.perf_counter() - t0
-    spark.createDataFrame([], cdc._LEDGER_SCHEMA).write.mode("overwrite").parquet(
+    local_frame(spark, [], cdc._LEDGER_SCHEMA).write.mode("overwrite").parquet(
         cdc._ledger_path(tbl)
     )
 
@@ -178,7 +179,7 @@ def probe_full(spark, sf_dir: str) -> dict:
     base = cdc._base_state_partitioned(spark, sf_dir).localCheckpoint()
     base.repartition(32).write.mode("overwrite").parquet(data_path)
     seed_s = time.perf_counter() - t0
-    spark.createDataFrame([], cdc._LEDGER_SCHEMA).write.mode("overwrite").parquet(
+    local_frame(spark, [], cdc._LEDGER_SCHEMA).write.mode("overwrite").parquet(
         cdc._ledger_path(tbl)
     )
 

@@ -33,7 +33,7 @@ from wheels_in_motion_analytics_spark.functions.similarity import (
     oracle_shingles,
 )
 from wheels_in_motion_analytics_spark.registry import register
-from wheels_in_motion_analytics_spark.tables import table
+from wheels_in_motion_analytics_spark.tables import local_frame, table
 
 # train/val/test fractions in integer percent (bucket space is 0..99)
 SPLIT_TRAIN = 80
@@ -1054,9 +1054,7 @@ def learning_curve_nested_samples(spark: SparkSession, sf_dir: str) -> DataFrame
             F.concat(F.lit("lc:"), F.col("o_orderkey").cast("string")), 13
         ).alias("draw"),
     )
-    tiers = spark.createDataFrame(
-        [(p,) for p in LC_TIERS_PCT], "pct long"
-    )
+    tiers = local_frame(spark, [(p,) for p in LC_TIERS_PCT], "pct long")
     # draw/2^52 < pct/100 as exact cross-multiplication (52-bit uniform)
     return (
         u.join(

@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 import pyspark.sql.functions as F
 
 from wheels_in_motion_analytics_spark.registry import register
-from wheels_in_motion_analytics_spark.tables import table
+from wheels_in_motion_analytics_spark.tables import local_frame, table
 
 # quantization grids: Q8 for squared-term sums (x^2 ~ 1e-2), Q10 for
 # centroid-product sums (centroid components ~ 1e-2, products ~ 1e-4)
@@ -646,7 +646,8 @@ def embedding_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame
     trace = float(np.trace(A))
     import pandas as pd  # noqa: F401
 
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 COV_DIM,
@@ -812,7 +813,7 @@ def embedding_rank_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     for r in per_dim:
         offs.append((r["dim"], acc, r["dim_n"]))
         acc += r["dim_n"]
-    off = spark.createDataFrame(offs, "dim BIGINT, dim_off BIGINT, dim_n BIGINT")
+    off = local_frame(spark, offs, "dim BIGINT, dim_off BIGINT, dim_n BIGINT")
     ranked = g.join(F.broadcast(off), "dim").select(
         "dim",
         "val",

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 import pyspark.sql.functions as F
 
 from wheels_in_motion_analytics_spark.registry import register
-from wheels_in_motion_analytics_spark.tables import table
+from wheels_in_motion_analytics_spark.tables import local_frame, table
 
 PR_ITERS = 6
 PR_DAMPING = 0.85
@@ -275,7 +275,7 @@ def bfs_min_hops(edges: DataFrame, seed: int, max_hops: int = BFS_HOPS) -> DataF
     an empty frontier short-circuits.
     """
     spark = edges.sparkSession
-    visited = spark.createDataFrame([(seed, 0)], "node long, hop int").localCheckpoint()
+    visited = local_frame(spark, [(seed, 0)], "node long, hop int").localCheckpoint()
     frontier = visited
     for h in range(1, max_hops + 1):
         nxt = (
@@ -421,7 +421,7 @@ def sssp_cheapest_supply_path(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()
     )
     seed = int(edges.agg(F.min("src").alias("m")).collect()[0].m)
-    dist = spark.createDataFrame([(seed, 0)], "node BIGINT, cost BIGINT")
+    dist = local_frame(spark, [(seed, 0)], "node BIGINT, cost BIGINT")
     for _ in range(SSSP_ROUNDS):
         relaxed = edges.join(dist, edges.src == dist.node).select(
             F.col("dst").alias("node"), (F.col("cost") + F.col("w")).alias("cost")

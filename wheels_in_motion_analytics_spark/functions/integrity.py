@@ -30,7 +30,7 @@ from wheels_in_motion_analytics_spark.functions.similarity import (
     hash_hex,
 )
 from wheels_in_motion_analytics_spark.registry import register
-from wheels_in_motion_analytics_spark.tables import table
+from wheels_in_motion_analytics_spark.tables import local_frame, table
 
 # --------------------------------------------------------------------------
 # Bloom-filter semi-join pruning audit
@@ -542,7 +542,8 @@ def observe_dq_single_pass(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distributed pass with no sink I/O — stand-in for the production write)
     observed.write.mode("overwrite").format("noop").save()
     m = obs.get
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 int(m["n_rows"]),

@@ -31,7 +31,7 @@ import pyspark.sql.functions as F
 from wheels_in_motion_analytics_spark.functions.similarity import hash_hex
 from wheels_in_motion_analytics_spark.functions.text import tokens
 from wheels_in_motion_analytics_spark.registry import REGISTRY, register
-from wheels_in_motion_analytics_spark.tables import table
+from wheels_in_motion_analytics_spark.tables import local_frame, table
 
 # ---------------------------------------------------------------------------
 # Decision stump: best binary split by weighted Gini over histogram bins
@@ -705,8 +705,8 @@ def naive_bayes_token_model(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("lang", F.col("t").alias("token"))
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    probe = toks.sparkSession.createDataFrame(
-        [(t,) for t in NB_PROBE_TOKENS], "token string"
+    probe = local_frame(
+        toks.sparkSession, [(t,) for t in NB_PROBE_TOKENS], "token string"
     )
     grid = (
         cls.crossJoin(F.broadcast(probe))

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
 from wheels_in_motion_analytics_spark.registry import register
-from wheels_in_motion_analytics_spark.tables import table
+from wheels_in_motion_analytics_spark.tables import local_frame, table
 
 PQ_M = 8  # subspaces
 PQ_SUBDIM = 8  # dims per subspace (8 x 8 = the 64-dim corpus)
@@ -120,7 +120,8 @@ def _codebook_df(spark: SparkSession) -> DataFrame:
         PQ_FROZEN_CODEBOOKS,
     )
 
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (m, k, [float(v) for v in row])
             for m, book in enumerate(PQ_FROZEN_CODEBOOKS)
@@ -508,20 +509,17 @@ SELECT query_id, neighbor_id, adc_micro FROM (
 def ann_ivf_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from wheels_in_motion_analytics_spark.functions.ivf_artifact import (
-        IVF_FROZEN_CENTROIDS,
+    from wheels_in_motion_analytics_spark.functions.similarity import (
+        dot,
+        ivf_centroid_frame,
     )
-    from wheels_in_motion_analytics_spark.functions.similarity import dot
 
     n = table(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("e"),
     )
     nn = n.withColumn("nrm", F.sqrt(dot(F.col("e"), F.col("e")))).localCheckpoint()
-    cdf = spark.createDataFrame(
-        [(c, [float(v) for v in row]) for c, row in enumerate(IVF_FROZEN_CENTROIDS)],
-        "cell INT, cvec ARRAY<DOUBLE>",
-    )
+    cdf = ivf_centroid_frame(spark)
     sims = nn.crossJoin(F.broadcast(cdf)).select(
         "vec_id",
         "cell",

@@ -28,7 +28,7 @@ import pyspark.sql.functions as F
 
 from wheels_in_motion_analytics_spark.compat import dsum, oracle_dsum
 from wheels_in_motion_analytics_spark.registry import register
-from wheels_in_motion_analytics_spark.tables import table
+from wheels_in_motion_analytics_spark.tables import local_frame, table
 
 # --------------------------------------------------------------------------
 # Cohort retention matrix
@@ -1078,7 +1078,8 @@ def _markov_chain(spark: SparkSession, sf_dir: str):
 def markov_stationary_behavior(spark: SparkSession, sf_dir: str) -> DataFrame:
     _edges, pi = _markov_chain(spark, sf_dir)
     s = sum(pi.values())
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(st, p, (2_000_000 * p + s) // (2 * s)) for st, p in sorted(pi.items())],
         "state string, pi_grid long, pi_norm_ppm long",
     )
@@ -1263,7 +1264,8 @@ def markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         if from_type in pi
     )
     z = sum(pi.values())
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(len(pi), (2 * s + z * 1000) // (2 * z * 1000))],
         "n_states long, entropy_rate_micro_nats long",
     )

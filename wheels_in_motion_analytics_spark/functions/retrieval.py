@@ -25,7 +25,7 @@ import pyspark.sql.functions as F
 
 from wheels_in_motion_analytics_spark.functions.text import tokens
 from wheels_in_motion_analytics_spark.registry import register
-from wheels_in_motion_analytics_spark.tables import table
+from wheels_in_motion_analytics_spark.tables import local_frame, table
 
 # BM25 free parameters (the standard Robertson defaults).
 BM25_K1 = 1.2
@@ -478,9 +478,7 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("mmr_score", T.LongType()),
         ]
     )
-    return spark.createDataFrame(
-        [tuple(int(x) for x in row) for row in selected], schema
-    )
+    return local_frame(spark, [tuple(int(x) for x in row) for row in selected], schema)
 
 
 from wheels_in_motion_analytics_spark.registry import REGISTRY as _REG_MMR  # noqa: E402

@@ -26,7 +26,7 @@ import pyspark.sql.functions as F
 
 from wheels_in_motion_analytics_spark.functions.text import fingerprint, tokens
 from wheels_in_motion_analytics_spark.registry import REGISTRY, register
-from wheels_in_motion_analytics_spark.tables import table
+from wheels_in_motion_analytics_spark.tables import local_frame, table
 
 # ---------------------------------------------------------------------------
 # Portable hashing: 60-bit (or n-hex-digit) integers from md5, identical in
@@ -718,6 +718,20 @@ def _norm_vectors_of(vectors: DataFrame) -> DataFrame:
     )
 
 
+def ivf_centroid_frame(spark: SparkSession) -> DataFrame:
+    """The frozen IVF coarse-quantizer centroids as a (cell, cvec) relation
+    — the tiny broadcast side of every relational cell-ranking crossJoin."""
+    from wheels_in_motion_analytics_spark.functions.ivf_artifact import (
+        IVF_FROZEN_CENTROIDS,
+    )
+
+    return local_frame(
+        spark,
+        [(c, [float(v) for v in row]) for c, row in enumerate(IVF_FROZEN_CENTROIDS)],
+        "cell INT, cvec ARRAY<DOUBLE>",
+    )
+
+
 def _exact_cosine_rerank(vectors: DataFrame, cand: DataFrame) -> DataFrame:
     """Exact cosine for candidate pairs WITHOUT any driver-side corpus
     collect: join the pair list back to the vector table for both sides'
@@ -1039,15 +1053,8 @@ SELECT query_id, neighbor_id, cosine FROM (
 def ann_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from wheels_in_motion_analytics_spark.functions.ivf_artifact import (
-        IVF_FROZEN_CENTROIDS,
-    )
-
     vectors = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cdf = spark.createDataFrame(
-        [(c, [float(v) for v in row]) for c, row in enumerate(IVF_FROZEN_CENTROIDS)],
-        "cell INT, cvec ARRAY<DOUBLE>",
-    )
+    cdf = ivf_centroid_frame(spark)
     # Relational cell ranking: 16-row centroid relation broadcast into a
     # crossJoin (n × IVF_CELLS rows), JVM-side sequential-fold dot product
     # (matches the oracle's list_dot_product), rounded to 6 dp so ranking
@@ -1170,16 +1177,9 @@ FROM dropped d JOIN dup_edges e
 def semdedup_cluster_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from wheels_in_motion_analytics_spark.functions.ivf_artifact import (
-        IVF_FROZEN_CENTROIDS,
-    )
-
     vectors = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     nv = _norm_vectors_of(vectors).localCheckpoint()
-    cdf = spark.createDataFrame(
-        [(c, [float(v) for v in row]) for c, row in enumerate(IVF_FROZEN_CENTROIDS)],
-        "cell INT, cvec ARRAY<DOUBLE>",
-    )
+    cdf = ivf_centroid_frame(spark)
     sims = nv.crossJoin(F.broadcast(cdf)).select(
         "vec_id",
         "cell",
@@ -1312,15 +1312,8 @@ GROUP BY p.cell
 def kmeans_lloyd_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from wheels_in_motion_analytics_spark.functions.ivf_artifact import (
-        IVF_FROZEN_CENTROIDS,
-    )
-
     vectors = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cdf = spark.createDataFrame(
-        [(c, [float(v) for v in row]) for c, row in enumerate(IVF_FROZEN_CENTROIDS)],
-        "cell INT, cvec ARRAY<DOUBLE>",
-    )
+    cdf = ivf_centroid_frame(spark)
     normed = _norm_vectors_of(vectors)
     sims = normed.crossJoin(F.broadcast(cdf)).select(
         "vec_id",
@@ -2249,15 +2242,8 @@ FROM pts GROUP BY cell
 def silhouette_simplified_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from wheels_in_motion_analytics_spark.functions.ivf_artifact import (
-        IVF_FROZEN_CENTROIDS,
-    )
-
     vectors = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cdf = spark.createDataFrame(
-        [(c, [float(v) for v in row]) for c, row in enumerate(IVF_FROZEN_CENTROIDS)],
-        "cell INT, cvec ARRAY<DOUBLE>",
-    )
+    cdf = ivf_centroid_frame(spark)
     sims = (
         _norm_vectors_of(vectors)
         .crossJoin(F.broadcast(cdf))

@@ -20,7 +20,7 @@ from wheels_in_motion_analytics_spark.functions.text import (
     tokens,
 )
 from wheels_in_motion_analytics_spark.registry import register
-from wheels_in_motion_analytics_spark.tables import table
+from wheels_in_motion_analytics_spark.tables import local_frame, table
 
 # Public-shape PII patterns (simplified, deterministic).
 PII_PATTERNS: list[tuple[str, str]] = [
@@ -876,7 +876,7 @@ def vocab_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
     )
     grid = vocab.select(c("vt").alias("token")).unionByName(
-        spark.createDataFrame([("<OTHER>",)], "token string")
+        local_frame(spark, [("<OTHER>",)], "token string")
     )
     filled = (
         grid.join(cell, "token", "left")

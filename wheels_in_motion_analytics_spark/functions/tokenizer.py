@@ -38,7 +38,7 @@ import pyspark.sql.functions as F
 
 from wheels_in_motion_analytics_spark.registry import register
 from wheels_in_motion_analytics_spark.functions.text import tokens
-from wheels_in_motion_analytics_spark.tables import table
+from wheels_in_motion_analytics_spark.tables import local_frame, table
 
 BPE_MERGES = 3
 BPE_TOPN = 40
@@ -157,8 +157,8 @@ _MERGE_ROWS = "\nUNION ALL\n".join(
 )
 def bpe_merge_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     learned, _ = train_bpe(word_freqs(spark, sf_dir))
-    return spark.createDataFrame(
-        [(k, p) for k, p in enumerate(learned)], "step int, pair string"
+    return local_frame(
+        spark, [(k, p) for k, p in enumerate(learned)], "step int, pair string"
     )
 
 

@@ -19,7 +19,7 @@ import pyspark.sql.functions as F
 
 from wheels_in_motion_analytics_spark.compat import davg, dsum, oracle_davg, oracle_dsum
 from wheels_in_motion_analytics_spark.registry import register
-from wheels_in_motion_analytics_spark.tables import table
+from wheels_in_motion_analytics_spark.tables import local_frame, table
 
 
 def null_profile(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
@@ -337,8 +337,8 @@ def percentile_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         table(spark, sf_dir, "lineitem"), "l_returnflag", "l_extendedprice", [0.5, 0.9]
     )
     rows = [(g, v[0], v[1]) for g, v in sorted(pct.items())]
-    return spark.createDataFrame(
-        rows, "l_returnflag string, p50_raw double, p90_raw double"
+    return local_frame(
+        spark, rows, "l_returnflag string, p50_raw double, p90_raw double"
     ).select(
         "l_returnflag",
         F.round("p50_raw", 4).alias("p50"),

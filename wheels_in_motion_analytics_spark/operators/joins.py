@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 import pyspark.sql.functions as F
 
 from wheels_in_motion_analytics_spark.registry import register
-from wheels_in_motion_analytics_spark.tables import table
+from wheels_in_motion_analytics_spark.tables import local_frame, table
 
 
 def anti_join(df: DataFrame, keys_df: DataFrame, on: list[str]) -> DataFrame:
@@ -95,7 +95,8 @@ def band_join_price_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     from wheels_in_motion_analytics_spark.compat import dsum
 
     part = table(spark, sf_dir, "part")
-    bands = spark.createDataFrame(
+    bands = local_frame(
+        spark,
         [("low", 0.0, 500.0), ("mid", 500.0, 1200.0), ("high", 1200.0, 1e9)],
         "band string, lo double, hi double",
     )

@@ -14,7 +14,7 @@ import pyspark.sql.functions as F
 
 from wheels_in_motion_analytics_spark.compat import dsum, oracle_dsum
 from wheels_in_motion_analytics_spark.registry import register
-from wheels_in_motion_analytics_spark.tables import table
+from wheels_in_motion_analytics_spark.tables import local_frame, table
 
 
 def gap_fill_locf(
@@ -1304,8 +1304,8 @@ def theil_sen_trend_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # scalars are exact products of distributed jobs; surface them as the
     # 1-row result relation
-    return spark.createDataFrame(
-        [(n_pairs, median)], "n_pairs bigint, median_slope_scaled bigint"
+    return local_frame(
+        spark, [(n_pairs, median)], "n_pairs bigint, median_slope_scaled bigint"
     )
 
 

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 import pyspark.sql.functions as F
 
 from wheels_in_motion_analytics_spark.registry import register
-from wheels_in_motion_analytics_spark.tables import table
+from wheels_in_motion_analytics_spark.tables import local_frame, table
 
 
 @register(
@@ -351,7 +351,7 @@ def _ranked_by_range(
     for row in sorted(counts, key=lambda r: r["__pid"]):
         offsets.append((row["__pid"], acc))
         acc += row["c"]
-    off = spark.createDataFrame(offsets or [], "__pid int, __off long")
+    off = local_frame(spark, offsets, "__pid int, __off long")
     w = Window.partitionBy("__pid").orderBy(*order_cols)
     ranked = (
         ranged.withColumn("__lrn", F.row_number().over(w))
@@ -446,8 +446,8 @@ def global_prefix_sums(
         for c in value_cols:
             acc[c] += r[c] or 0
     off_cols = [f"__off{i}" for i in range(len(value_cols))]
-    off = spark.createDataFrame(
-        rows or [], "__pid int, " + ", ".join(f"{c} long" for c in off_cols)
+    off = local_frame(
+        spark, rows, "__pid int, " + ", ".join(f"{c} long" for c in off_cols)
     )
     w = (
         Window.partitionBy("__pid")
@@ -531,7 +531,8 @@ def global_quartiles_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         r = m % 4
         hi = lo + (1 if r else 0)
         out.append(vals[lo] * (4 - r) + vals[hi] * r)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [tuple(out)],
         "n long, p25_cents_x4 long, p50_cents_x4 long, p75_cents_x4 long",
     )
@@ -567,7 +568,7 @@ def global_prefix_max(
         rows.append((r["__pid"], best))
         if r["m"] is not None and (best is None or r["m"] > best):
             best = r["m"]
-    off = spark.createDataFrame(rows or [], "__pid int, __pmoff long")
+    off = local_frame(spark, rows, "__pid int, __pmoff long")
     w = (
         Window.partitionBy("__pid")
         .orderBy(*order_cols)
@@ -704,7 +705,8 @@ def group_exact_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             hi = lo + (1 if r else 0)
             row.append(vals[lo] * (4 - r) + vals[hi] * r)
         rows.append(tuple(row))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "grp string, n long, p25_cents_x4 long, p50_cents_x4 long, "
         "p75_cents_x4 long",
@@ -840,7 +842,7 @@ def grouped_rank_values(
     one bucket of its previous range), and across groups the group key
     separates them — so one ``groupBy (range_id, bucket)`` histograms
     everything at once. The live ranges attach as a TINY BROADCAST
-    RELATION (equi-join on the group key + range filter), NOT as an
+    RELATION (null-safe equi-join on the group key + range filter), NOT as an
     inline CASE chain: a when-chain over ``groups × targets`` ranges
     blows up analysis/codegen super-linearly (measured 1.1 s → 22 s →
     minutes per round at 23–28 ranges on 15k rows — the round-4 lesson
@@ -886,9 +888,14 @@ def grouped_rank_values(
     for _ in range(8):
         if not live:
             break
-        ranges = sorted({(g, lo, hi) for (g, _), (lo, hi, _) in live.items()})
+        # NULL is a group too (percentile() keeps it): sort it first
+        ranges = sorted(
+            {(g, lo, hi) for (g, _), (lo, hi, _) in live.items()},
+            key=lambda r: (r[0] is not None, r),
+        )
         widths = [(hi - lo) // buckets + 1 for _, lo, hi in ranges]
-        rng = spark.createDataFrame(
+        rng = local_frame(
+            spark,
             [
                 (i, g, lo, hi, width)
                 for i, ((g, lo, hi), width) in enumerate(zip(ranges, widths))
@@ -897,8 +904,10 @@ def grouped_rank_values(
         )
         hist = (
             src.join(
-                F.broadcast(rng),
-                (F.col("g") == F.col("__g"))
+                # one task ships the few range rows to the broadcast (a
+                # LocalTableScan spreads them over up to one task per core)
+                F.broadcast(rng.coalesce(1)),
+                F.col("g").eqNullSafe(F.col("__g"))
                 & (F.col("v") >= F.col("__lo"))
                 & (F.col("v") <= F.col("__hi")),
             )

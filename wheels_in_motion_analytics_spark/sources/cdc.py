@@ -32,7 +32,7 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 
 from wheels_in_motion_analytics_spark.registry import register
-from wheels_in_motion_analytics_spark.tables import table
+from wheels_in_motion_analytics_spark.tables import local_frame, table
 
 _LEDGER_SCHEMA = T.StructType([T.StructField("batch_id", T.StringType())])
 
@@ -117,7 +117,7 @@ def merge_upsert(
         .localCheckpoint()
     )
     merged.write.mode("overwrite").parquet(os.path.join(table_path, "data"))
-    spark.createDataFrame([(batch_id,)], _LEDGER_SCHEMA).write.mode("append").parquet(
+    local_frame(spark, [(batch_id,)], _LEDGER_SCHEMA).write.mode("append").parquet(
         _ledger_path(table_path)
     )
     return True
@@ -178,7 +178,7 @@ def run_cdc_pipeline(spark: SparkSession, sf_dir: str, table_path: str) -> DataF
     base = _base_state(spark, sf_dir).localCheckpoint()
     base.write.mode("overwrite").parquet(os.path.join(table_path, "data"))
     ledger = _ledger_path(table_path)
-    spark.createDataFrame([], _LEDGER_SCHEMA).write.mode("overwrite").parquet(ledger)
+    local_frame(spark, [], _LEDGER_SCHEMA).write.mode("overwrite").parquet(ledger)
 
     applied_first = merge_upsert(
         spark, table_path, _update_batch(spark, sf_dir), ["order_id"], "version", "batch-1"
@@ -313,7 +313,7 @@ def merge_upsert_partitioned(
         .partitionBy(partition_col)
         .parquet(data_path)
     )
-    spark.createDataFrame([(batch_id,)], _LEDGER_SCHEMA).write.mode("append").parquet(
+    local_frame(spark, [(batch_id,)], _LEDGER_SCHEMA).write.mode("append").parquet(
         _ledger_path(table_path)
     )
     return True
@@ -366,7 +366,7 @@ def run_partitioned_cdc(spark: SparkSession, sf_dir: str, table_path: str) -> Da
     base.repartition(F.col("order_month")).write.mode("overwrite").partitionBy(
         "order_month"
     ).parquet(data_path)
-    spark.createDataFrame([], _LEDGER_SCHEMA).write.mode("overwrite").parquet(
+    local_frame(spark, [], _LEDGER_SCHEMA).write.mode("overwrite").parquet(
         _ledger_path(table_path)
     )
     first = merge_upsert_partitioned(

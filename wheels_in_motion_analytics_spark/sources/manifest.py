@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
 from wheels_in_motion_analytics_spark.registry import register
-from wheels_in_motion_analytics_spark.tables import table
+from wheels_in_motion_analytics_spark.tables import local_frame, table
 
 
 def manifest_from_dict(spark: SparkSession, links: dict[str, str]) -> DataFrame:
@@ -23,8 +23,8 @@ def manifest_from_dict(spark: SparkSession, links: dict[str, str]) -> DataFrame:
     Parsed with explicit English month literals instead of to_date's 'MMM'
     pattern — JVM text-pattern parsing follows the default locale, and the
     manifest keys are always English."""
-    df = spark.createDataFrame(
-        [(k, v) for k, v in links.items()], "date_key string, rel_path string"
+    df = local_frame(
+        spark, [(k, v) for k, v in links.items()], "date_key string, rel_path string"
     )
     months = F.array(
         *[F.lit(m) for m in

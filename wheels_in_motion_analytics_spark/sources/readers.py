@@ -13,6 +13,8 @@ from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 
+from wheels_in_motion_analytics_spark.tables import local_frame
+
 
 def read_csv(
     spark: SparkSession,
@@ -59,7 +61,7 @@ def read_parquet_or_empty(
     try:
         return spark.read.parquet(path)
     except Exception:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
 
 
 def normalize_json_payload(
@@ -123,7 +125,7 @@ def fetch_binary(spark: SparkSession, urls: list[str], timeout_s: int = 10) -> D
                     out.append((u, f"error: {type(e).__name__}", 0, b""))
             yield pd.DataFrame(out, columns=["url", "status", "n_bytes", "content"])
 
-    src = spark.createDataFrame([(u,) for u in urls], "url STRING")
+    src = local_frame(spark, [(u,) for u in urls], "url STRING")
     # one fetch task per small URL group — network-bound, so parallelism
     # should track the URL count, not the default input splits
     par = max(1, min(len(urls), spark.sparkContext.defaultParallelism))

@@ -173,6 +173,39 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.schema(SCHEMAS[name]).parquet(path)
 
 
+def local_frame(
+    spark: SparkSession, rows: list, schema: T.StructType | str
+) -> DataFrame:
+    """A driver-side row list as a JVM ``LocalRelation``.
+
+    ``spark.createDataFrame(<list>, ddl)`` parallelizes the list and maps
+    it through a Python worker, so the first action on the relation runs
+    a Spark job (plan leaf ``Scan ExistingRDD``). This helper hands the
+    rows over as an Arrow table instead: the plan leaf is a
+    ``LocalTableScan``, collecting it runs no job, and broadcasting it
+    starts no Python worker.
+
+    ``schema`` is a DDL string or a ``StructType``; ``rows`` are tuples in
+    field order. Values pass the same type check as ``createDataFrame``;
+    Arrow also refuses a value its column cannot hold exactly, such as a
+    number in a string column or a decimal with more digits than its scale.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = schema if isinstance(schema, T.StructType) else T.StructType.fromDDL(schema)
+    verify = T._make_type_verifier(struct)
+    for row in rows:
+        verify(row)
+    arrow_schema = to_arrow_schema(struct)
+    columns = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(list(col), type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, struct)
+
+
 def _events_table(spark: SparkSession, path: str) -> DataFrame:
     """events loader: dispatch on the PHYSICAL timestamp type (see
     :func:`table` docstring) without paying a per-call Spark inference job.
