@@ -496,13 +496,14 @@ def test_grouped_percentile_doubles_bit_equals_percentile_aggregate(spark):
 def test_grouped_rank_values_keeps_null_group(spark):
     """A NULL group key is a group of its own, as in percentile(): its
     ranks match the sorted-index reference and its percentiles match the
-    aggregate's, bit for bit."""
+    aggregate's, bit for bit. The ranks are taken over values spread past
+    2^62, so the narrowing needs more than one round."""
     import random
     import struct
 
     from wheels_in_motion_analytics_spark.operators.windows import (
         grouped_percentile_doubles,
-        grouped_rank_values,
+        rank_values,
     )
     from wheels_in_motion_analytics_spark.tables import local_frame
 
@@ -516,11 +517,12 @@ def test_grouped_rank_values_keeps_null_group(spark):
     def want(n):
         return [1, (n + 1) // 2, n]
 
-    got = grouped_rank_values(df, "g", "v", want, buckets=16)
+    spread = df.select("g", (F.col("v") * 2**46).alias("v"))
+    got = rank_values(spread, "v", want, group_col="g")
     ref: dict = {}
     for g, v in rows:
         if v is not None:
-            ref.setdefault(g, []).append(v)
+            ref.setdefault(g, []).append(v * 2**46)
     assert set(got) == {"A", "B", None}
     for g, vals in ref.items():
         vals.sort()
@@ -544,13 +546,19 @@ def test_grouped_rank_values_keeps_null_group(spark):
 
 
 def test_grouped_rank_values_empty_input(spark):
-    from wheels_in_motion_analytics_spark.operators.windows import grouped_rank_values
+    """No rows to rank: the grouped form returns {}, the global form raises
+    a named ValueError — for an empty relation and for all-NULL values."""
+    import pytest
+
+    from wheels_in_motion_analytics_spark.operators.windows import rank_values
     from wheels_in_motion_analytics_spark.tables import local_frame
 
     empty = local_frame(spark, [], "g string, v bigint")
-    assert grouped_rank_values(empty, "g", "v", lambda n: [1, n]) == {}
     only_nulls = local_frame(spark, [("A", None), (None, None)], "g string, v bigint")
-    assert grouped_rank_values(only_nulls, "g", "v", lambda n: [1, n]) == {}
+    for df in (empty, only_nulls):
+        assert rank_values(df, "v", lambda n: [1, n], group_col="g") == {}
+        with pytest.raises(ValueError, match="empty relation"):
+            rank_values(df, "v", lambda n: [1, n])
 
 
 def test_group_exact_percentiles_matches_window_rank_form(spark):

@@ -747,21 +747,23 @@ def test_ann_bucketed_topk_is_two_phase_group_limit(spark):
 # measured at sf0.001 (second run), + headroom of 3 for AQE sub-job
 # variance and one extra histogram round at wider value ranges.
 _JOB_BUDGETS = {
-    "global_quartiles_exact": 6 + 3,
-    "percentile_exact": 8 + 3,
-    "group_exact_percentiles": 11 + 3,
+    "global_quartiles_exact": 4 + 3,
+    "percentile_exact": 4 + 3,
+    "group_exact_percentiles": 4 + 3,
+    "winsorize_prices": 6 + 3,
     "markov_stationary_behavior": 5 + 3,
     "markov_entropy_rate": 5 + 3,
-    "theil_sen_trend_daily": 13 + 3,
-    "conformal_interval_calibration": 11 + 3,
+    "theil_sen_trend_daily": 11 + 3,
+    "conformal_interval_calibration": 9 + 3,
     "newsvendor_stock_level": 8 + 3,
-    "var_cvar_revenue_changes": 11 + 3,
+    "var_cvar_revenue_changes": 9 + 3,
+    "runs_test_randomness": 8 + 3,
     "anomaly_days_seasonal_mad": 6 + 3,
     "feature_binning_buckets": 8 + 3,
 }
 
 # Of those, the queries whose result relation is assembled on the driver:
-# a LocalTableScan, so collecting it adds no job. The other five fold the
+# a LocalTableScan, so collecting it adds no job. The others fold the
 # selected scalars into one last distributed pass as literals.
 _DRIVER_ASSEMBLED = {
     "global_quartiles_exact",

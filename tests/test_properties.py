@@ -3,7 +3,8 @@ the engine-level guarantees that hold for ANY data, not just the fixtures."""
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+import pytest
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 import pyspark.sql.functions as F
@@ -145,25 +146,42 @@ def test_two_phase_rank_family_matches_global_window(spark, rows, parts, tiles):
     assert got_ps == want_ps
 
 
+# Hostile inputs for the selection core, each checked against the
+# sorted-index reference: NULL values, all-NULL and empty input, a single
+# distinct value, negative values, and spans past 2^62 (up to the full
+# 64-bit range), which force several narrowing rounds.
+_WIDE = [-(2**63), 2**63 - 1, 0, -1, 1, 2**62 + 5, -(2**62) - 5, 2**63 - 2]
+
+
 @given(
     vals=st.lists(
         st.integers(min_value=-(2**52), max_value=2**52), min_size=1, max_size=60
     ),
     kfrac=st.integers(min_value=0, max_value=100),
 )
+@example(vals=[], kfrac=0)
+@example(vals=[None, None], kfrac=50)
+@example(vals=[None, 5, None, -3, 5, -(2**40)], kfrac=50)
+@example(vals=[-7] * 9, kfrac=30)
+@example(vals=_WIDE, kfrac=40)
 @settings(**SETTINGS)
 def test_global_kth_smallest_matches_sorted_index(spark, vals, kfrac):
-    """Distributed quickselect == sorted()[k-1] for any integer multiset
-    (negative values, duplicates, full 53-bit range) and any valid rank."""
-    from wheels_in_motion_analytics_spark.operators.windows import (
-        global_kth_smallest,
-    )
+    """Single-rank global selection == sorted()[k-1] for any integer
+    multiset (negative values, duplicates, NULLs, the full 64-bit range)
+    and any valid rank; an empty or all-NULL relation raises."""
+    from wheels_in_motion_analytics_spark.operators.windows import rank_values
+    from wheels_in_motion_analytics_spark.tables import local_frame
 
-    k = 1 + (kfrac * (len(vals) - 1)) // 100
-    df = spark.createDataFrame([(v,) for v in vals], "x long")
-    got, n = global_kth_smallest(df, "x", k)
-    assert n == len(vals)
-    assert got == sorted(vals)[k - 1]
+    df = local_frame(spark, [(v,) for v in vals], "x long")
+    ordered = sorted(v for v in vals if v is not None)
+    if not ordered:
+        with pytest.raises(ValueError, match="empty relation"):
+            rank_values(df, "x", [1])
+        return
+    k = 1 + (kfrac * (len(ordered) - 1)) // 100
+    got, n = rank_values(df, "x", [k])
+    assert n == len(ordered)
+    assert got == {k: ordered[k - 1]}
 
 
 @given(
@@ -172,21 +190,31 @@ def test_global_kth_smallest_matches_sorted_index(spark, vals, kfrac):
     ),
     kfracs=st.lists(st.integers(min_value=0, max_value=100), min_size=1, max_size=6),
 )
+@example(vals=[None, 4, 4, None, -2], kfracs=[0, 50, 100])
+@example(vals=[3] * 5, kfracs=[0, 100])
+@example(vals=_WIDE * 4, kfracs=list(range(0, 101, 4)))
 @settings(**SETTINGS)
 def test_global_rank_values_matches_sorted_index(spark, vals, kfracs):
     """Shared-round multi-rank selection == sorted()[k-1] for every target
-    at once (negative values, duplicates, full 53-bit range, coincident and
-    adjacent ranks) — the r10 generalization of global_kth_smallest."""
-    from wheels_in_motion_analytics_spark.operators.windows import (
-        global_rank_values,
-    )
+    at once (negative values, duplicates, NULLs, the full 64-bit range,
+    coincident and adjacent ranks)."""
+    from wheels_in_motion_analytics_spark.operators.windows import rank_values
+    from wheels_in_motion_analytics_spark.tables import local_frame
 
-    ks = sorted({1 + (kf * (len(vals) - 1)) // 100 for kf in kfracs})
-    df = spark.createDataFrame([(v,) for v in vals], "x long")
-    got, n = global_rank_values(df, "x", ks)
-    ordered = sorted(vals)
-    assert n == len(vals)
+    ordered = sorted(v for v in vals if v is not None)
+    ks = sorted({1 + (kf * (len(ordered) - 1)) // 100 for kf in kfracs})
+    df = local_frame(spark, [(v,) for v in vals], "x long")
+    got, n = rank_values(df, "x", ks)
+    assert n == len(ordered)
     assert got == {k: ordered[k - 1] for k in ks}
+
+
+# five groups x six targets = 30 live ranges over a span past 2^62; the
+# keys include a NULL group and the characters SQL text must escape
+_HOSTILE_GROUPS = {
+    g: [(i * 7919 + j * 104729) % 1000 * (2**53) - 2**62 - j for i in range(40)]
+    for j, g in enumerate([None, "it's", "back\\slash", "", "A"])
+}
 
 
 @given(
@@ -202,27 +230,31 @@ def test_global_rank_values_matches_sorted_index(spark, vals, kfracs):
     ),
     kfracs=st.lists(st.integers(min_value=0, max_value=100), min_size=1, max_size=4),
 )
+@example(groups={"A": [None, 2, 1], None: [5, -5, 0], "B": [None]}, kfracs=[0, 50])
+@example(groups={"o'k": [1, -1, 1], "a\\b": [9], "\\'": [4, 4]}, kfracs=[100])
+@example(groups={}, kfracs=[0])
+@example(groups=_HOSTILE_GROUPS, kfracs=[0, 20, 40, 60, 80, 100])
 @settings(**SETTINGS)
 def test_grouped_rank_values_matches_sorted_index(spark, groups, kfracs):
     """Group-keyed shared-round selection == per-group sorted()[k-1] for
-    every (group, target) at once — the r11 group-keyed sibling of
-    global_rank_values (broadcast-relation ranges, no expression forest)."""
-    from wheels_in_motion_analytics_spark.operators.windows import (
-        grouped_rank_values,
-    )
+    every (group, target) at once, including a NULL group, keys with
+    quotes and backslashes, NULL values (an all-NULL group has no rows to
+    rank and is absent) and 30 live ranges over a span past 2^62."""
+    from wheels_in_motion_analytics_spark.operators.windows import rank_values
+    from wheels_in_motion_analytics_spark.tables import local_frame
+
+    def want(n):
+        return sorted({1 + (kf * (n - 1)) // 100 for kf in kfracs})
 
     rows = [(g, v) for g, vs in groups.items() for v in vs]
-    df = spark.createDataFrame(rows, "g string, x long")
-    got = grouped_rank_values(
-        df, "g", "x", lambda n: sorted({1 + (kf * (n - 1)) // 100 for kf in kfracs})
-    )
-    assert set(got) == set(groups)
-    for g, vs in groups.items():
-        ordered = sorted(vs)
-        vals, n = got[g]
-        assert n == len(vs)
-        want = sorted({1 + (kf * (n - 1)) // 100 for kf in kfracs})
-        assert vals == {k: ordered[k - 1] for k in want}
+    df = local_frame(spark, rows, "g string, x long")
+    got = rank_values(df, "x", want, group_col="g")
+    ref = {g: sorted(v for v in vs if v is not None) for g, vs in groups.items()}
+    ref = {g: vs for g, vs in ref.items() if vs}
+    assert set(got) == set(ref)
+    for g, ordered in ref.items():
+        n = len(ordered)
+        assert got[g] == ({k: ordered[k - 1] for k in want(n)}, n), g
 
 
 @given(

@@ -1432,8 +1432,8 @@ CONF_ALPHA_PCT = 10  # target 90% coverage
     "calibrates (model = per-priority mean price trained on the "
     "calibration half only), the nonconformity quantile q = the "
     f"ceil((n+1)*{100 - CONF_ALPHA_PCT}/100)-th smallest |residual| — an "
-    "EXACT order statistic selected by the distributed quickselect "
-    "(operators/windows.py:global_kth_smallest, histogram narrowing, "
+    "EXACT order statistic selected by distributed selection "
+    "(operators/windows.py:rank_values, histogram narrowing, "
     "never a global sort) — and the held-out half audits empirical "
     "coverage of ŷ±q. The distribution-free uncertainty method modern "
     "eval stacks use. All integers: cents grid, floor group means, "
@@ -1482,7 +1482,7 @@ FROM q CROSS JOIN cov
 )
 def conformal_interval_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     from wheels_in_motion_analytics_spark.functions.similarity import hash_hex
-    from wheels_in_motion_analytics_spark.operators.windows import global_kth_smallest
+    from wheels_in_motion_analytics_spark.operators.windows import rank_values
 
     c = F.col
     o = table(spark, sf_dir, "orders").select(
@@ -1506,7 +1506,7 @@ def conformal_interval_calibration(spark: SparkSession, sf_dir: str) -> DataFram
     resid = (
         o.join(F.broadcast(model), "prio")
         .select("k", "is_cal", F.abs(c("cents") - c("yhat")).alias("r"))
-        # quickselect (multi-pass) + the coverage agg both read this
+        # selection (multi-pass) + the coverage agg both read this
         .localCheckpoint()
     )
     cal = resid.where("is_cal")
@@ -1515,8 +1515,9 @@ def conformal_interval_calibration(spark: SparkSession, sf_dir: str) -> DataFram
     def q_rank(n: int) -> int:
         return min(-(-(n + 1) * keep // 100), n)  # ceil, capped at n
 
-    q_cents, n_cal = global_kth_smallest(cal, "r", q_rank)
+    vals, n_cal = rank_values(cal, "r", lambda n: [q_rank(n)])
     q_idx = q_rank(n_cal)
+    q_cents = vals[q_idx]
     cov = resid.where(~c("is_cal")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_test"),
         F.sum((c("r") <= q_cents).cast("bigint")).cast("bigint").alias("n_covered"),

@@ -1661,7 +1661,8 @@ def sprt_sequential_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     category="stats",
     doc="Wald–Wolfowitz runs test on daily revenue vs its median: days "
     "classify above/below the EXACT lower median (selected by the "
-    "distributed quickselect — ties with the median drop, the standard "
+    "distributed histogram selection, rank_values — ties with the median "
+    "drop, the standard "
     "treatment), the run count comes from one lag pass over the bounded "
     "day grain, and the normal-approximation verdict |z| > 1.96 is "
     "decided ENTIRELY in integers by cross-multiplication: "
@@ -1710,7 +1711,7 @@ FROM agg
 def runs_test_randomness(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    from wheels_in_motion_analytics_spark.operators.windows import global_kth_smallest
+    from wheels_in_motion_analytics_spark.operators.windows import rank_values
 
     c = F.col
     d = (
@@ -1721,9 +1722,10 @@ def runs_test_randomness(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint")
             ).alias("cents")
         )
-        .localCheckpoint()  # quickselect passes + the runs pass share it
+        .localCheckpoint()  # selection passes + the runs pass share it
     )
-    m, _n = global_kth_smallest(d, "cents", lambda n: (n + 1) // 2)
+    vals, _n = rank_values(d, "cents", lambda n: [(n + 1) // 2])
+    (m,) = vals.values()
     s = d.where(c("cents") != m).select(
         "day", (c("cents") > m).cast("int").alias("above")
     )

@@ -311,7 +311,7 @@ def grouping_sets_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     category="aggregates",
     doc="Exact continuous percentiles per group (oracle: quantile_cont). "
     "r11 rewrite: per-group shared-round histogram selection "
-    "(grouped_rank_values) + Spark's own interpolation arithmetic "
+    "(rank_values) + Spark's own interpolation arithmetic "
     "reproduced op-for-op on the selected straddling values — "
     "bit-identical to the former percentile() aggregate (pinned by "
     "tests/test_operators.py) WITHOUT its per-group counts-map state, "

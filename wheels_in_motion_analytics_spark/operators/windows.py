@@ -320,48 +320,6 @@ def weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _ranked_by_range(
-    df: DataFrame,
-    order_cols: list,
-    rn_name: str,
-    partitions: int | None,
-) -> tuple[DataFrame, int]:
-    """Shared core of :func:`global_row_number` / :func:`global_ntile`:
-    returns (ranked df, total row count) — the count falls out of the
-    offset pass for free, so callers never pay a separate counting job."""
-    spark = df.sparkSession
-    if partitions is None:
-        # scan/shuffle-width default: enough to keep every core busy without
-        # spraying a local run into hundreds of tiny range partitions
-        partitions = spark.sparkContext.defaultParallelism
-    # LAZY local checkpoint (r11 fuse): the offsets job below is the first
-    # consumer, so it materializes the range-partitioned blocks as it
-    # counts them — one job instead of eager-checkpoint + count. The
-    # nondeterministic range sampling still executes exactly once (the
-    # window pass reads the SAME stored blocks; a local checkpoint cannot
-    # recompute — lineage is truncated, so a lost block fails loudly
-    # rather than resampling).
-    ranged = (
-        df.repartitionByRange(partitions, *order_cols)
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
-    )
-    counts = ranged.groupBy("__pid").agg(F.count(F.lit(1)).alias("c")).collect()
-    offsets, acc = [], 0
-    for row in sorted(counts, key=lambda r: r["__pid"]):
-        offsets.append((row["__pid"], acc))
-        acc += row["c"]
-    off = local_frame(spark, offsets, "__pid int, __off long")
-    w = Window.partitionBy("__pid").orderBy(*order_cols)
-    ranked = (
-        ranged.withColumn("__lrn", F.row_number().over(w))
-        .join(F.broadcast(off), "__pid")
-        .withColumn(rn_name, (F.col("__lrn") + F.col("__off")).cast("long"))
-        .drop("__pid", "__lrn", "__off")
-    )
-    return ranked, acc
-
-
 def global_row_number(
     df: DataFrame,
     order_cols: list,
@@ -369,26 +327,14 @@ def global_row_number(
     partitions: int | None = None,
 ) -> DataFrame:
     """Exact global ``row_number`` over a TOTAL order without the
-    single-task funnel of an unpartitioned window.
-
-    TeraSort-shaped two-phase rank:
-
-    1. ``repartitionByRange`` on the order columns — a sampled range
-       partitioner sorts in parallel (partition *i* holds strictly lower
-       key tuples than partition *i+1*);
-    2. per-partition row counts → cumulative offsets. The only driver-side
-       state is one number per partition — bounded by the partition count,
-       never by data size;
-    3. a window partitioned by the RANGE partition id computes the local
-       row_number, and local + offset is the exact global rank. Every
-       window group is one range partition, so parallelism equals the sort
-       parallelism — no single-task stage anywhere in the plan.
+    single-task funnel of an unpartitioned window: the inclusive running
+    count of rows, i.e. :func:`global_prefix_sums` of a constant 1.
 
     Exact for any partition boundaries as long as ``order_cols`` is a total
-    order (include a unique tiebreak). The range input is checkpointed once
-    because two jobs consume it (the count pass and the rank pass).
-    """
-    return _ranked_by_range(df, order_cols, rn_name, partitions)[0]
+    order (include a unique tiebreak)."""
+    ones = df.withColumn("__one", F.lit(1).cast("long"))
+    ranked, _ = _prefix_sums(ones, order_cols, ["__one"], partitions, "_cum")
+    return ranked.withColumnRenamed("__one_cum", rn_name).drop("__one")
 
 
 def global_ntile(
@@ -400,15 +346,17 @@ def global_ntile(
 ) -> DataFrame:
     """Exact global ``ntile(n)`` on top of the two-phase rank — identical
     semantics to ``ntile`` over an unpartitioned window (the first
-    ``N mod n`` tiles get the extra row), minus its single-task sort."""
-    ranked, n_total = _ranked_by_range(df, order_cols, "__grn", partitions)
-    q, r = divmod(n_total, n_tiles)
+    ``N mod n`` tiles get the extra row), minus its single-task sort. The
+    row total falls out of the per-partition sums, so no counting job."""
+    ones = df.withColumn("__one", F.lit(1).cast("long"))
+    ranked, totals = _prefix_sums(ones, order_cols, ["__one"], partitions, "_cum")
+    q, r = divmod(totals["__one"], n_tiles)
     big = q + 1  # tiles 1..r have q+1 rows; tiles r+1..n have q rows
-    rn = F.col("__grn")
+    rn = F.col("__one_cum")
     tile = F.when(
         rn <= big * r, ((rn - 1) / big).cast("long") + 1
     ).otherwise(F.lit(r) + ((rn - 1 - big * r) / F.greatest(F.lit(q), F.lit(1))).cast("long") + 1)
-    return ranked.withColumn(tile_name, tile.cast("int")).drop("__grn")
+    return ranked.withColumn(tile_name, tile.cast("int")).drop("__one", "__one_cum")
 
 
 def global_prefix_sums(
@@ -419,17 +367,47 @@ def global_prefix_sums(
     suffix: str = "_cum",
 ) -> DataFrame:
     """Exact INCLUSIVE global running sums of integral ``value_cols`` over a
-    total order — the same two-phase shape as :func:`global_row_number`
-    (range-partition parallel sort → per-partition sums → local running sum
-    + partition offset), so rank statistics (Mann-Whitney, KS, CDFs) never
-    pay a single-task global window even when the distinct-value relation
-    is nearly row-cardinality. Values must be integral (LONG offsets keep
-    the result exact under any partitioning)."""
+    total order, TeraSort-shaped so rank statistics (Mann-Whitney, KS,
+    CDFs) never pay a single-task global window even when the
+    distinct-value relation is nearly row-cardinality:
+
+    1. ``repartitionByRange`` on the order columns — a sampled range
+       partitioner sorts in parallel (partition *i* holds strictly lower
+       key tuples than partition *i+1*);
+    2. per-partition sums → cumulative offsets. The only driver-side state
+       is one row per partition — bounded by the partition count, never by
+       data size;
+    3. a window partitioned by the RANGE partition id computes the local
+       running sum, and local + offset is the exact global sum. Every
+       window group is one range partition, so parallelism equals the sort
+       parallelism — no single-task stage anywhere in the plan.
+
+    Values must be integral (LONG offsets keep the result exact under any
+    partitioning)."""
+    return _prefix_sums(df, order_cols, value_cols, partitions, suffix)[0]
+
+
+def _prefix_sums(
+    df: DataFrame,
+    order_cols: list,
+    value_cols: list,
+    partitions: int | None,
+    suffix: str,
+) -> tuple[DataFrame, dict[str, int]]:
+    """:func:`global_prefix_sums` plus each column's grand total, which the
+    offset pass yields for free."""
     spark = df.sparkSession
     if partitions is None:
+        # scan/shuffle-width default: enough to keep every core busy without
+        # spraying a local run into hundreds of tiny range partitions
         partitions = spark.sparkContext.defaultParallelism
-    # lazy checkpoint: the per-partition sums job materializes the blocks
-    # (see _ranked_by_range — 2 jobs instead of 3 per use)
+    # LAZY local checkpoint (r11 fuse): the per-partition sums job below is
+    # the first consumer, so it materializes the range-partitioned blocks —
+    # 2 jobs per use instead of eager-checkpoint + sums + final. The
+    # nondeterministic range sampling still executes exactly once (the
+    # window pass reads the SAME stored blocks; a local checkpoint cannot
+    # recompute — lineage is truncated, so a lost block fails loudly
+    # rather than resampling).
     ranged = (
         df.repartitionByRange(partitions, *order_cols)
         .withColumn("__pid", F.spark_partition_id())
@@ -454,12 +432,15 @@ def global_prefix_sums(
         .orderBy(*order_cols)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    out = ranged.join(F.broadcast(off), "__pid")
-    for i, c in enumerate(value_cols):
-        out = out.withColumn(
-            c + suffix, (F.sum(c).over(w) + F.col(off_cols[i])).cast("long")
-        )
-    return out.drop("__pid", *off_cols)
+    # window before the offsets join: joining first measured ~15% slower
+    # (ntile over sf0.1 lineitem, min of 5)
+    out = ranged
+    for c in value_cols:
+        out = out.withColumn(c + suffix, F.sum(c).over(w))
+    out = out.join(F.broadcast(off), "__pid")
+    for c, o in zip(value_cols, off_cols):
+        out = out.withColumn(c + suffix, (F.col(c + suffix) + F.col(o)).cast("long"))
+    return out.drop("__pid", *off_cols), acc
 
 
 @register(
@@ -468,13 +449,13 @@ def global_prefix_sums(
     doc="EXACT corpus-wide p25/p50/p75 of l_extendedprice by distributed "
     "order-statistic selection: prices quantize to integer cents and each "
     "quartile's two straddling ranks are selected by shared-round histogram "
-    "narrowing (global_rank_values — 16384-way integer histograms, all six "
-    "target ranks narrowed in the SAME scan each round), with quantile_cont "
+    "narrowing (rank_values — one integer histogram of <=16384 rows per "
+    "round, all six target ranks narrowed in the SAME scan), with quantile_cont "
     "interpolation done in EXACT integer arithmetic (result × 4 is an "
     "integer because the interpolation fractions are quarters). No "
     "single-task sort, no float accumulation — and, unlike a rank-"
     "everything two-phase sort, NO shuffle of the data at all: selection "
-    "needs counts, not ranks, so the only exchange is the ≤65537-row "
+    "needs counts, not ranks, so the only exchange is the ≤16385-row "
     "histogram merge. r10 rewrite from the two-phase global rank (which "
     "range-shuffled + sorted all rows, joined offsets, then threw away all "
     "but 6 ranks): 2.9–3.5 s → ~0.9 s at sf0.1, and the 100 TB posture "
@@ -521,9 +502,7 @@ def global_quartiles_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             want += [lo, lo + (1 if m % 4 else 0)]
         return want
 
-    # plain column scan per histogram round (2 rounds at sf0.1 cents
-    # magnitudes) — cheaper than a checkpoint job for a source-backed scan
-    vals, n = global_rank_values(li, "cents", quartile_ranks, materialize=False)
+    vals, n = rank_values(li, "cents", quartile_ranks)
     out = [n]
     for k in (1, 2, 3):
         m = k * (n - 1)
@@ -556,7 +535,7 @@ def global_prefix_max(
     if partitions is None:
         partitions = spark.sparkContext.defaultParallelism
     # lazy checkpoint: the per-partition max job materializes the blocks
-    # (see _ranked_by_range — 2 jobs instead of 3 per use)
+    # (see _prefix_sums — 2 jobs instead of 3 per use)
     ranged = (
         df.repartitionByRange(partitions, *order_cols)
         .withColumn("__pid", F.spark_partition_id())
@@ -647,7 +626,7 @@ def skyline_pareto_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="EXACT per-group p25/p50/p75 of order value (integer cents, "
     "results x4 so quarter-interpolation stays integer — same arithmetic "
     "as global_quartiles_exact): each group's six straddling ranks are "
-    "selected by shared-round histogram narrowing (grouped_rank_values — "
+    "selected by shared-round histogram narrowing (rank_values — "
     "ALL groups and ALL targets histogrammed in the SAME scan each "
     "round), quarter-interpolated in exact integer arithmetic. SCALE "
     "SHAPE (r11 rewrite from a group-partitioned window rank): the old "
@@ -694,7 +673,7 @@ def group_exact_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             ranks += [lo, lo + (1 if m % 4 else 0)]
         return ranks
 
-    sel = grouped_rank_values(o, "grp", "cents", want)
+    sel = rank_values(o, "cents", want, group_col="grp")
     rows = []
     for g, (vals, n) in sorted(sel.items()):
         row = [g, n]
@@ -713,239 +692,143 @@ def group_exact_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Histogram fan-out per narrowing round. 16384 keeps the driver collect to
-# <= 16385 rows/round (a 65536-way histogram collect measured 0.3-0.6s via
-# py4j at sf0.1 — the dominant cost of a round) while still resolving any
-# 64-bit range in <= ceil(64/14)+1 = 6 rounds and any cents-magnitude range
-# (<= ~2.7e8 after one round) in 2.
-_HIST_BUCKETS = 16384
+# Histogram rows one narrowing round may collect, shared by its live
+# ranges. A 65536-way collect measured 0.3-0.6 s via py4j at sf0.1 — the
+# dominant cost of a round — while one range's 16384-way histogram still
+# resolves any 64-bit range in <= 5 rounds and any cents-magnitude range
+# (<= ~2.7e8) in 2.
+_ROUND_ROWS = 16384
 
-def global_rank_values(
-    df: DataFrame,
-    col: str,
-    ranks,
-    materialize: bool = True,
-) -> tuple[dict[int, int], int]:
+
+def _round_buckets(rows: list[int]) -> int:
+    """Buckets per live range for one round, given each range's row count:
+    a range holding c rows returns at most min(c, buckets) histogram rows,
+    so ranges with few rows leave their unused share to the others. When
+    every row fits in the budget the buckets are as fine as the bigint key
+    allows, and most targets resolve in that round."""
+    rest, cap = _ROUND_ROWS, 2**62 // len(rows)
+    for j, c in enumerate(sorted(rows)):
+        share = rest // (len(rows) - j)
+        if c > share:
+            return max(2, min(share, cap))
+        rest -= c
+    return cap
+
+
+def _group_literal(g) -> str:
+    """SQL text for a group key. Strings travel as hex byte literals, so no
+    quote or backslash in a key needs escaping."""
+    if isinstance(g, str):
+        return f"CAST(X'{g.encode().hex()}' AS STRING)"
+    if isinstance(g, int):
+        return str(g)
+    raise TypeError(f"rank selection: unsupported group key type {type(g).__name__}")
+
+
+def rank_values(df: DataFrame, col: str, ranks, group_col: str | None = None):
     """EXACT order-statistic selection of SEVERAL ranks of an integral
-    column in shared histogram rounds — the multi-rank sibling of
-    :func:`global_kth_smallest` (same narrowing idea, one job per round for
-    ALL targets instead of one quickselect per target).
+    column by shared-round histogram narrowing, per group of ``group_col``
+    or, without one, over the whole relation (the one-group case).
 
     ``ranks`` is a list of 1-based target ranks or a callable ``n ->
-    list[int]`` resolved against the relation size. Returns
-    ``({rank: value}, n_rows)``.
+    list[int]`` resolved against each group's size. NULL values are
+    ignored (``percentile()`` semantics); a NULL group key is a group of
+    its own. Returns ``({rank: value}, n_rows)`` without ``group_col`` —
+    raising ``ValueError`` on an empty relation — and ``{group: ({rank:
+    value}, n_rows)}`` with it (``{}`` when empty).
 
-    Why one job per round stays possible with many targets: every target
-    starts from the same [min, max] range, and each round a target's range
-    narrows to ONE bucket of its previous range — so live ranges are always
-    pairwise identical-or-disjoint, every row belongs to at most one range,
-    and a single ``CASE``-keyed ``groupBy (range_id, bucket)`` histograms
-    all of them in one partial-aggregable pass. Driver state is bounded by
-    65537 x n_targets rows per round, never by data. No sort, NO shuffle of
-    the data anywhere (the only exchange is the tiny histogram merge) —
-    compare the TeraSort-shaped two-phase rank, which range-shuffles the
-    entire relation to produce ranks that a selection query throws away.
+    One job sizes every group (min, max, count), then ONE job per round
+    serves ALL groups and ALL targets: every target starts from its
+    group's [min, max] and each round narrows to ONE bucket of its
+    previous range, so within a group the live ranges are identical-or-
+    disjoint and every row falls in at most one of them. The ranges
+    attach as ONE flat ``CASE`` parsed from SQL text in one call — no
+    broadcast range relation (a one-task job per round) and no ``Column``
+    forest (seconds of driver-side py4j time at ~30 ranges) — whose value
+    packs (range id, bucket) into one bigint key for a single
+    partial-aggregable ``groupBy``. The round's ``_ROUND_ROWS`` budget is
+    split over the live ranges (:func:`_round_buckets`), which bounds the
+    driver collect and sets the round cap; no sort, no shuffle of the data
+    anywhere. Replaces the per-group counts map of ``percentile()``
+    (partial maps grow with distinct values per group — a memory hazard at
+    scale) with bounded histograms.
     """
-    src = df.select(F.col(col).alias("v"))
-    if materialize:
-        # lazy: the min/max job below materializes the blocks (one job
-        # saved per use — the same fuse as the two-phase rank family)
-        src = src.localCheckpoint(eager=False)
-    mm = src.agg(F.min("v").alias("mn"), F.max("v").alias("mx")).collect()[0]
-    if mm.mn is None:
-        raise ValueError("rank selection over an empty relation")
-    # resolve n + target list from the first full-range histogram
-    n_total: int | None = None
-    # live targets: rank -> (lo, hi, kk) with kk the rank inside [lo, hi]
-    live: dict[int, tuple[int, int, int]] = {}
-    resolved: dict[int, int] = {}
-    first_lo, first_hi = mm.mn, mm.mx
-    for _ in range(8):
-        if n_total is not None and not live:
-            break
-        if n_total is None:
-            ranges = [(first_lo, first_hi)]
-        else:
-            # identical-or-disjoint by construction; histogram each once
-            ranges = sorted({(lo, hi) for lo, hi, _ in live.values()})
-        widths = [(hi - lo) // _HIST_BUCKETS + 1 for lo, hi in ranges]
-        bucket = None
-        for i, ((lo, hi), width) in enumerate(zip(ranges, widths)):
-            # integer DIV, not float-divide-then-cast (NOTES.md round-3)
-            b = F.when(
-                (F.col("v") >= lo) & (F.col("v") <= hi),
-                F.expr(f"CAST((v - {lo}) DIV {width} AS BIGINT)"),
-            )
-            bucket = b if bucket is None else F.coalesce(bucket, b)
-            if i == 0:
-                rid = F.when((F.col("v") >= lo) & (F.col("v") <= hi), i)
-            else:
-                rid = rid.when((F.col("v") >= lo) & (F.col("v") <= hi), i)
-        hist = (
-            src.groupBy(rid.alias("r"), bucket.alias("b"))
-            .count()
-            .where(F.col("r").isNotNull())
-            .collect()
-        )
-        per_range: dict[int, list] = {}
-        for row in hist:
-            per_range.setdefault(row["r"], []).append(row)
-        if n_total is None:
-            n_total = sum(r["count"] for r in per_range.get(0, []))
-            want = sorted(set(ranks(n_total) if callable(ranks) else ranks))
-            for k in want:
-                if not 1 <= k <= n_total:
-                    raise ValueError(f"rank {k} outside 1..{n_total}")
-            live = {k: (first_lo, first_hi, k) for k in want}
-        nxt: dict[int, tuple[int, int, int]] = {}
-        for k, (lo, hi, kk) in live.items():
-            if lo == hi:
-                resolved[k] = lo
-                continue
-            ridx = ranges.index((lo, hi))
-            width = widths[ridx]
-            acc, g = 0, None
-            for row in sorted(per_range.get(ridx, []), key=lambda r: r["b"]):
-                if acc + row["count"] >= kk:
-                    g = row["b"]
-                    kk -= acc
-                    break
-                acc += row["count"]
-            assert g is not None
-            if width == 1:
-                resolved[k] = lo + g
-            else:
-                nlo = lo + g * width
-                nxt[k] = (nlo, min(hi, nlo + width - 1), kk)
-        live = nxt
-    if live:
-        raise AssertionError("multi-rank selection failed to converge in 8 rounds")
-    return resolved, n_total
-
-
-def grouped_rank_values(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    ranks,
-    buckets: int = 4096,
-) -> dict:
-    """EXACT per-GROUP order-statistic selection of an integral column in
-    shared histogram rounds — the group-keyed sibling of
-    :func:`global_rank_values` for bounded group domains (return flags,
-    nations, priorities). ``ranks`` is a callable ``n -> list[int]``
-    resolved against each group's size. Returns
-    ``{group: ({rank: value}, n_rows)}``.
-
-    One job per round for ALL groups and ALL targets: within a group the
-    live ranges are identical-or-disjoint (each target's range narrows to
-    one bucket of its previous range), and across groups the group key
-    separates them — so one ``groupBy (range_id, bucket)`` histograms
-    everything at once. The live ranges attach as a TINY BROADCAST
-    RELATION (null-safe equi-join on the group key + range filter), NOT as an
-    inline CASE chain: a when-chain over ``groups × targets`` ranges
-    blows up analysis/codegen super-linearly (measured 1.1 s → 22 s →
-    minutes per round at 23–28 ranges on 15k rows — the round-4 lesson
-    that literal model state belongs in a broadcast relation, not an
-    expression forest). Driver state per round is bounded by ``buckets ×
-    live_ranges`` (live_ranges ≤ groups × targets), never by data.
-    Replaces the per-group counts-map state of Spark's ``percentile()``
-    aggregate (whose partial maps grow with distinct values per group — a
-    memory hazard at scale) with fixed-size histograms; no sort, no
-    shuffle of the data anywhere.
-    """
+    keys = [] if group_col is None else ["g"]
     src = (
-        df.select(F.col(group_col).alias("g"), F.col(value_col).alias("v"))
-        .where(F.col("v").isNotNull())  # percentile() semantics: nulls ignored
+        df.select(*[F.col(group_col).alias(k) for k in keys], F.col(col).alias("v"))
+        .where(F.col("v").isNotNull())
         # lazy: the min/max/count job below materializes the blocks
         .localCheckpoint(eager=False)
     )
-    base = src.groupBy("g").agg(
+    base = src.groupBy(*keys).agg(
         F.min("v").alias("mn"), F.max("v").alias("mx"), F.count(F.lit(1)).alias("n")
     ).collect()
-    live: dict[tuple, tuple[int, int, int]] = {}  # (g, rank) -> (lo, hi, kk)
-    resolved: dict = {}
+    out: dict = {}
+    # (g, rank) -> (lo, hi, rank inside [lo, hi], rows in [lo, hi])
+    live: dict[tuple, tuple[int, int, int, int]] = {}
     for row in base:
-        g, n = row["g"], row["n"]
-        resolved[g] = ({}, n)
-        for k in sorted(set(ranks(n))):
+        g, n = (row["g"] if keys else None), row["n"]
+        if n == 0:  # the global aggregate of an empty relation
+            continue
+        out[g] = ({}, n)
+        for k in sorted(set(ranks(n) if callable(ranks) else ranks)):
             if not 1 <= k <= n:
                 raise ValueError(f"rank {k} outside 1..{n} for group {g!r}")
-            live[(g, k)] = (row["mn"], row["mx"], k)
-    spark = df.sparkSession
-    import pyspark.sql.types as T
-
-    g_type = src.schema["g"].dataType
-    rng_schema = T.StructType(
-        [
-            T.StructField("__r", T.IntegerType()),
-            T.StructField("__g", g_type),
-            T.StructField("__lo", T.LongType()),
-            T.StructField("__hi", T.LongType()),
-            T.StructField("__w", T.LongType()),
-        ]
-    )
-    for _ in range(8):
+            if row["mn"] == row["mx"]:
+                out[g][0][k] = row["mn"]
+            else:
+                live[(g, k)] = (row["mn"], row["mx"], k, n)
+    if not keys and not out:
+        raise ValueError("rank selection over an empty relation")
+    # live ranges never outnumber live targets, so every round gets at
+    # least this many buckets per range — enough rounds to split any
+    # 64-bit span down to one value
+    fewest = max(2, _ROUND_ROWS // max(1, len(live)))
+    max_rounds = next(r for r in range(1, 65) if fewest**r >= 2**64)
+    for _ in range(max_rounds):
         if not live:
             break
-        # NULL is a group too (percentile() keeps it): sort it first
-        ranges = sorted(
-            {(g, lo, hi) for (g, _), (lo, hi, _) in live.items()},
-            key=lambda r: (r[0] is not None, r),
-        )
-        widths = [(hi - lo) // buckets + 1 for _, lo, hi in ranges]
-        rng = local_frame(
-            spark,
-            [
-                (i, g, lo, hi, width)
-                for i, ((g, lo, hi), width) in enumerate(zip(ranges, widths))
-            ],
-            rng_schema,
-        )
-        hist = (
-            src.join(
-                # one task ships the few range rows to the broadcast (a
-                # LocalTableScan spreads them over up to one task per core)
-                F.broadcast(rng.coalesce(1)),
-                F.col("g").eqNullSafe(F.col("__g"))
-                & (F.col("v") >= F.col("__lo"))
-                & (F.col("v") <= F.col("__hi")),
-            )
+        ranges = list(dict.fromkeys((g, lo, hi, c) for (g, _), (lo, hi, _, c) in live.items()))
+        b = _round_buckets([c for *_, c in ranges])
+        whens = []
+        for i, (g, lo, hi, _) in enumerate(ranges):
+            cond = f"v BETWEEN {lo} AND {hi}"
+            if keys:
+                cond = f"g {'IS NULL' if g is None else '= ' + _group_literal(g)} AND {cond}"
+            # a span past 2^63 would overflow the bigint subtraction
+            diff = f"v - {lo}" if hi - lo < 2**63 else f"CAST(v AS DECIMAL(20, 0)) - {lo}"
             # integer DIV, not float-divide-then-cast (NOTES.md round-3)
-            .groupBy(
-                F.col("__r").alias("r"),
-                F.expr("CAST((v - __lo) DIV __w AS BIGINT)").alias("b"),
-            )
+            whens.append(f"WHEN {cond} THEN {i * b} + ({diff}) DIV {(hi - lo) // b + 1}")
+        # rows outside every range skip the CASE and the aggregate
+        hull = f"v BETWEEN {min(r[1] for r in ranges)} AND {max(r[2] for r in ranges)}"
+        hist = (
+            src.where(hull)
+            .groupBy(F.expr(f"CASE {' '.join(whens)} END").alias("k"))
             .count()
             .collect()
         )
         per_range: dict[int, list] = {}
-        for row in hist:
-            per_range.setdefault(row["r"], []).append(row)
-        nxt: dict[tuple, tuple[int, int, int]] = {}
-        for (g, k), (lo, hi, kk) in live.items():
-            if lo == hi:
-                resolved[g][0][k] = lo
-                continue
-            ridx = ranges.index((g, lo, hi))
-            width = widths[ridx]
-            acc, picked = 0, None
-            for row in sorted(per_range.get(ridx, []), key=lambda r: r["b"]):
-                if acc + row["count"] >= kk:
-                    picked = row["b"]
-                    kk -= acc
+        for key, c in hist:
+            if key is not None:
+                per_range.setdefault(key // b, []).append((key % b, c))
+        index = {r[:3]: i for i, r in enumerate(ranges)}
+        nxt: dict[tuple, tuple[int, int, int, int]] = {}
+        for (g, k), (lo, hi, kk, _) in live.items():
+            for bucket, c in sorted(per_range[index[(g, lo, hi)]]):
+                if kk <= c:
                     break
-                acc += row["count"]
-            assert picked is not None
-            if width == 1:
-                resolved[g][0][k] = lo + picked
+                kk -= c
+            width = (hi - lo) // b + 1
+            nlo = lo + bucket * width
+            nhi = min(hi, nlo + width - 1)
+            if nlo == nhi:
+                out[g][0][k] = nlo
             else:
-                nlo = lo + picked * width
-                nxt[(g, k)] = (nlo, min(hi, nlo + width - 1), kk)
+                nxt[(g, k)] = (nlo, nhi, kk, c)
         live = nxt
     if live:
-        raise AssertionError("grouped rank selection failed to converge in 8 rounds")
-    return resolved
+        raise AssertionError(f"rank selection failed to converge in {max_rounds} rounds")
+    return out if keys else out[None]
 
 
 def grouped_percentile_doubles(
@@ -957,7 +840,7 @@ def grouped_percentile_doubles(
 ) -> dict:
     """EXACT per-group continuous percentiles of a fixed-decimal DOUBLE
     column, BIT-IDENTICAL to Spark's ``percentile(col, frac)`` aggregate
-    (pinned by tests/test_operators.py), via :func:`grouped_rank_values`.
+    (pinned by tests/test_operators.py), via :func:`rank_values`.
 
     Requires every value to be an exact multiple of ``1/scale`` with
     ``scale`` a power of ten (TPC-H money columns): then
@@ -986,7 +869,7 @@ def grouped_percentile_doubles(
             out += [math.floor(pos) + 1, math.ceil(pos) + 1]
         return out
 
-    sel = grouped_rank_values(quant, "g", "c", want)
+    sel = rank_values(quant, "c", want, group_col="g")
     result = {}
     for g, (vals, n) in sel.items():
         outs = []
@@ -1001,71 +884,6 @@ def grouped_percentile_doubles(
                 outs.append((higher - pos) * v_lo + (pos - lower) * v_hi)
         result[g] = outs
     return result
-
-
-def global_kth_smallest(df: DataFrame, col: str, rank) -> tuple[int, int]:
-    """EXACT order-statistic selection of an integral column by distributed
-    quickselect — the selection complement of :func:`global_row_number`
-    when only ONE order statistic is needed (a full two-phase rank pays
-    range-sampling + checkpoint + offset machinery for ranks that are
-    thrown away).
-
-    ``rank`` is the 1-based target rank, either an int or a callable
-    ``n -> rank`` resolved against the relation size (so "lower median" =
-    ``lambda n: (n + 1) // 2`` costs no extra counting pass — the size
-    falls out of the first histogram). Returns ``(value, n_rows)``.
-
-    Histogram narrowing: each round splits the live value range into
-    <= _HIST_BUCKETS equal integer buckets, one map-side-combinable groupBy
-    counts them (driver collect bounded by _HIST_BUCKETS+1 rows), and the search
-    descends into the bucket containing the target rank. The range
-    shrinks by 2^14 per round, so <= 6 rounds resolve any 64-bit range —
-    every pass is a filter + partial-agg over a localCheckpoint'd
-    relation, no sort anywhere, driver state bounded by the bucket
-    count."""
-    # lazy checkpoint: the min/max job materializes the blocks (one job
-    # saved per use — the same fuse as the two-phase rank family)
-    src = df.select(F.col(col).alias("v")).localCheckpoint(eager=False)
-    mm = src.agg(F.min("v").alias("mn"), F.max("v").alias("mx")).collect()[0]
-    lo, hi = mm.mn, mm.mx
-    if lo is None:
-        raise ValueError("k-th smallest of an empty relation")
-    kk = None
-    n_total = None
-    # ONE checkpoint, ONE job per round: the narrowed bounds are known
-    # exactly from the chosen bucket (no re-min/max, no re-checkpoint —
-    # each round is a filtered partial-agg scan of the same checkpoint;
-    # per-job fixed cost dominates small rounds, so fewer jobs wins)
-    for _ in range(8):
-        width = (hi - lo) // _HIST_BUCKETS + 1
-        # integer DIV, not float-divide-then-cast (one-off-the-floor hazard
-        # on large magnitudes — NOTES.md round-3)
-        hist = (
-            src.where((F.col("v") >= lo) & (F.col("v") <= hi))
-            .groupBy(F.expr(f"CAST((v - {lo}) DIV {width} AS BIGINT)").alias("b"))
-            .count()
-            .collect()
-        )
-        if n_total is None:
-            n_total = sum(r["count"] for r in hist)
-            kk = rank(n_total) if callable(rank) else rank
-            if not 1 <= kk <= n_total:
-                raise ValueError(f"rank {kk} outside 1..{n_total}")
-        if lo == hi:
-            return lo, n_total
-        acc = 0
-        g = None
-        for row in sorted(hist, key=lambda r: r.b):
-            if acc + row["count"] >= kk:
-                g = row.b
-                kk -= acc
-                break
-            acc += row["count"]
-        assert g is not None
-        if width == 1:
-            return lo + g, n_total
-        lo, hi = lo + g * width, min(hi, lo + g * width + width - 1)
-    raise AssertionError("quickselect failed to converge in 8 rounds")
 
 
 @register(
