@@ -16,7 +16,7 @@ from wheels_in_motion_analytics_spark.functions.sql_surface import (
 from wheels_in_motion_analytics_spark.streaming.state_reader import (
     stream_state_store_read,
 )
-from wheels_in_motion_analytics_spark.tables import table
+from wheels_in_motion_analytics_spark.tables import star_sql, table
 
 
 def test_pipe_syntax_compiles_to_same_plan_as_ansi(spark):
@@ -165,14 +165,16 @@ def test_sql_sugar_suite_matches_spelled_out_ansi(spark):
     got = {tuple(r) for r in sql_sugar_suite(spark, SF_SMALL).collect()}
     want = {
         tuple(r)
-        for r in spark.sql(
+        for r in star_sql(
+            spark,
+            SF_SMALL,
             """
 SELECT o_orderpriority,
        CAST(least((CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) DIV 100)
                   DIV 50000, 5) AS BIGINT) AS bracket,
        COUNT(*) AS n_orders,
        SUM(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS cents_total
-FROM modernsql_orders_sugar
+FROM {orders}
 GROUP BY o_orderpriority, bracket
 """
         ).collect()

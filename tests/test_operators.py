@@ -546,8 +546,9 @@ def test_grouped_rank_values_keeps_null_group(spark):
 
 
 def test_grouped_rank_values_empty_input(spark):
-    """No rows to rank: the grouped form returns {}, the global form raises
-    a named ValueError — for an empty relation and for all-NULL values."""
+    """No rows to rank: the grouped form returns {} for an empty relation
+    and ({}, 0) for each all-NULL group; the global form raises a named
+    ValueError for both."""
     import pytest
 
     from wheels_in_motion_analytics_spark.operators.windows import rank_values
@@ -555,10 +556,67 @@ def test_grouped_rank_values_empty_input(spark):
 
     empty = local_frame(spark, [], "g string, v bigint")
     only_nulls = local_frame(spark, [("A", None), (None, None)], "g string, v bigint")
+    assert rank_values(empty, "v", lambda n: [1, n], group_col="g") == {}
+    assert rank_values(only_nulls, "v", lambda n: [1, n], group_col="g") == {
+        "A": ({}, 0),
+        None: ({}, 0),
+    }
     for df in (empty, only_nulls):
-        assert rank_values(df, "v", lambda n: [1, n], group_col="g") == {}
         with pytest.raises(ValueError, match="empty relation"):
             rank_values(df, "v", lambda n: [1, n])
+
+
+def test_all_null_group_gets_null_percentiles(spark):
+    """A group whose values are all NULL keeps its row with NULL
+    percentiles, as Spark's percentile() and DuckDB's quantile_cont do."""
+    from wheels_in_motion_analytics_spark.operators.windows import (
+        grouped_percentile_doubles,
+    )
+    from wheels_in_motion_analytics_spark.tables import local_frame
+
+    df = local_frame(
+        spark, [("A", None), ("A", 2.0), ("A", 1.0), ("B", None)], "g string, v double"
+    )
+    got = grouped_percentile_doubles(df, "g", "v", [0.5, 0.9])
+    want = {
+        r["g"]: r["p"]
+        for r in df.groupBy("g")
+        .agg(F.expr("percentile(v, array(0.5, 0.9))").alias("p"))
+        .collect()
+    }
+    assert want["B"] is None and got["B"] == [None, None]
+    assert got["A"] == want["A"]
+
+
+def test_theil_sen_pairs_safe_under_pushed_range_filter(spark):
+    """Filters on the slope with no checkpoint in between (a NULL filter,
+    then a selection round's range) are pushed into the pair join ahead of
+    ``db > da``; the guarded slope must not divide by a same-day datediff
+    of 0. Unguarded, this raises DIVIDE_BY_ZERO under ANSI mode."""
+    from wheels_in_motion_analytics_spark.operators.timeseries import theil_sen_pairs
+
+    cents = [(i * 7919) % 101 * 100 for i in range(40)]
+    days = spark.range(40).selectExpr(
+        "date_add(DATE '2024-01-01', CAST(id AS INT)) AS day",
+        "(id * 7919) % 101 * 100 AS cents",
+    )
+    hist = (
+        theil_sen_pairs(days)
+        .where(F.col("slope_scaled").isNotNull())
+        .where("slope_scaled BETWEEN -2000000000 AND 2000000000")
+        .groupBy(F.expr("slope_scaled DIV 1000000000").alias("k"))
+        .count()
+        .collect()
+    )
+    want: dict = {}
+    for i in range(40):
+        for j in range(i + 1, 40):
+            num = (cents[j] - cents[i]) * 2**20
+            slope = abs(num) // (j - i) * (1 if num >= 0 else -1)  # truncating
+            if -(2 * 10**9) <= slope <= 2 * 10**9:
+                k = abs(slope) // 10**9 * (1 if slope >= 0 else -1)
+                want[k] = want.get(k, 0) + 1
+    assert {r["k"]: r["count"] for r in hist} == want
 
 
 def test_group_exact_percentiles_matches_window_rank_form(spark):

@@ -231,6 +231,7 @@ _HOSTILE_GROUPS = {
     kfracs=st.lists(st.integers(min_value=0, max_value=100), min_size=1, max_size=4),
 )
 @example(groups={"A": [None, 2, 1], None: [5, -5, 0], "B": [None]}, kfracs=[0, 50])
+@example(groups={None: [None, None], "B": [7]}, kfracs=[50])
 @example(groups={"o'k": [1, -1, 1], "a\\b": [9], "\\'": [4, 4]}, kfracs=[100])
 @example(groups={}, kfracs=[0])
 @example(groups=_HOSTILE_GROUPS, kfracs=[0, 20, 40, 60, 80, 100])
@@ -238,8 +239,9 @@ _HOSTILE_GROUPS = {
 def test_grouped_rank_values_matches_sorted_index(spark, groups, kfracs):
     """Group-keyed shared-round selection == per-group sorted()[k-1] for
     every (group, target) at once, including a NULL group, keys with
-    quotes and backslashes, NULL values (an all-NULL group has no rows to
-    rank and is absent) and 30 live ranges over a span past 2^62."""
+    quotes and backslashes, NULL values (an all-NULL group is kept, with
+    no ranks and a count of 0, as ``percentile()`` keeps it with NULLs)
+    and 30 live ranges over a span past 2^62."""
     from wheels_in_motion_analytics_spark.operators.windows import rank_values
     from wheels_in_motion_analytics_spark.tables import local_frame
 
@@ -250,11 +252,11 @@ def test_grouped_rank_values_matches_sorted_index(spark, groups, kfracs):
     df = local_frame(spark, rows, "g string, x long")
     got = rank_values(df, "x", want, group_col="g")
     ref = {g: sorted(v for v in vs if v is not None) for g, vs in groups.items()}
-    ref = {g: vs for g, vs in ref.items() if vs}
     assert set(got) == set(ref)
     for g, ordered in ref.items():
         n = len(ordered)
-        assert got[g] == ({k: ordered[k - 1] for k in want(n)}, n), g
+        ranks = {k: ordered[k - 1] for k in want(n)} if n else {}
+        assert got[g] == (ranks, n), g
 
 
 @given(

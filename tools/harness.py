@@ -1,5 +1,7 @@
-"""Session warm-up and block release shared by the timing tools
-(``bench.py``, ``tools/time_queries.py``, ``tools/scale_probe_cdc.py``).
+"""Session warm-up, block release and py4j round-trip counting shared by
+the timing tools (``bench.py``, ``tools/time_queries.py``,
+``tools/scale_probe_cdc.py``) and the round-trip pins in
+``tests/test_star_sql.py``.
 
 Lives under ``tools/``, not in the package: the warm-up builds a Python
 list relation with ``createDataFrame``, which the package confines to
@@ -9,6 +11,8 @@ list relation with ``createDataFrame``, which the package confines to
 from __future__ import annotations
 
 import gc
+import threading
+from contextlib import contextmanager
 
 
 def warm_up(spark, specs: dict, sf_dir: str) -> None:
@@ -35,3 +39,29 @@ def release_blocks(spark) -> None:
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     for jrdd in list(jmap.values()):
         jrdd.unpersist(False)
+
+
+@contextmanager
+def py4j_commands(spark):
+    """Collect the py4j commands this thread sends to the JVM inside the
+    block: one entry per driver round trip.
+
+    py4j deletes the JVM twins of freed Python objects from a thread of
+    its own, at any time; those commands are not the block's cost and are
+    left out.
+    """
+    client = spark.sparkContext._gateway._gateway_client
+    orig = client.send_command
+    me = threading.get_ident()
+    sent: list[str] = []
+
+    def counting(command, *args, **kwargs):
+        if threading.get_ident() == me:
+            sent.append(command)
+        return orig(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        yield sent
+    finally:
+        client.send_command = orig

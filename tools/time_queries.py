@@ -3,8 +3,11 @@
 
 Bench-identical methodology (same session factory, same noop sink, min-of-N
 in one JVM after the same warmup) for optimizing individual queries without
-paying a full 443-query sweep. Optionally writes each query's
-explain("formatted") to <explain>/<name><suffix>.txt for the plan record.
+paying a full 443-query sweep. Each query's fastest run is split into
+``build_s`` (the registry call, including any jobs it runs eagerly) and
+``run_s`` (the noop write), with the py4j round trips the build sent;
+totals follow. Optionally writes each query's explain("formatted") to
+<explain>/<name><suffix>.txt for the plan record.
 """
 
 from __future__ import annotations
@@ -15,7 +18,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tools.harness import release_blocks, warm_up
+from tools.harness import py4j_commands, release_blocks, warm_up
 from wheels_in_motion_analytics_spark.registry import load_all_queries
 from wheels_in_motion_analytics_spark.session import get_session
 
@@ -34,7 +37,8 @@ def main() -> int:
 
     warm_up(spark, specs, sf_dir)
 
-    results: dict[str, float] = {}
+    results: dict[str, tuple[float, float, int]] = {}
+    print(f"{'build_s':>8} {'run_s':>8} {'trips':>6}  query", flush=True)
     for name in names:
         if name not in specs:
             print(f"?? unknown query {name}")
@@ -53,12 +57,16 @@ def main() -> int:
             release_blocks(spark)
             spark.sparkContext.setJobDescription(f"time:{name}")
             t0 = time.perf_counter()
-            specs[name].fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-            dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-        results[name] = round(best, 3)
-        print(f"{results[name]:8.3f}  {name}", flush=True)
-    print("TOTAL", round(sum(results.values()), 3))
+            with py4j_commands(spark) as sent:
+                df = specs[name].fn(spark, sf_dir)
+            t1 = time.perf_counter()
+            df.write.mode("overwrite").format("noop").save()
+            run = (t1 - t0, time.perf_counter() - t1, len(sent))
+            best = run if best is None or sum(run[:2]) < sum(best[:2]) else best
+        results[name] = best
+        print(f"{best[0]:8.3f} {best[1]:8.3f} {best[2]:6d}  {name}", flush=True)
+    totals = [sum(r[i] for r in results.values()) for i in range(3)]
+    print(f"{totals[0]:8.3f} {totals[1]:8.3f} {totals[2]:6d}  TOTAL")
     spark.stop()
     return 0
 

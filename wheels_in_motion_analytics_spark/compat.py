@@ -33,10 +33,11 @@ def davg(col: Column | str) -> Column:
 
 
 def oracle_dsum(expr: str) -> str:
-    """DuckDB rendition of :func:`dsum` over SQL expression ``expr``."""
+    """SQL rendition of :func:`dsum` over SQL expression ``expr``: the same
+    text in Spark SQL (``star_sql`` tiles) and in the DuckDB oracles."""
     return f"CAST(SUM(CAST({expr} AS DECIMAL(18,4))) AS DOUBLE)"
 
 
 def oracle_davg(expr: str) -> str:
-    """DuckDB rendition of :func:`davg`."""
+    """SQL rendition of :func:`davg`, for Spark SQL and DuckDB alike."""
     return f"CAST(SUM(CAST({expr} AS DECIMAL(18,4))) AS DOUBLE) / COUNT({expr})"

@@ -24,8 +24,10 @@ Spark-4-era SQL features a user migrating that surface would reach for:
   aggregate (Spark 4.0+); deterministic because the order-by key is
   unique per group.
 
-All state (temp views, functions, variables) is created OR REPLACE inside
-the callables — vanilla-driver-session safe and idempotent across reruns.
+Star tables are read through ``tables.star_sql`` (session views kept per
+table file); all other state (functions, variables) is created OR REPLACE
+inside the callables — vanilla-driver-session safe and idempotent across
+reruns.
 
 Determinism: money math on integer cents (floor(x*100 + 0.5) — identical
 IEEE ops in Spark and DuckDB); BIGINT sums CAST back from DuckDB HUGEINT
@@ -38,7 +40,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from wheels_in_motion_analytics_spark.registry import register
-from wheels_in_motion_analytics_spark.tables import table
+from wheels_in_motion_analytics_spark.tables import star_sql, table
 
 
 @register(
@@ -100,7 +102,6 @@ GROUP BY l_returnflag
 """,
 )
 def sql_scalar_udf_net_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    table(spark, sf_dir, "lineitem").createOrReplaceTempView("modernsql_lineitem")
     spark.sql(
         """
 CREATE OR REPLACE TEMPORARY FUNCTION modernsql_net_cents(price_cents BIGINT, disc_pct BIGINT)
@@ -108,17 +109,15 @@ RETURNS BIGINT
 RETURN (price_cents * (100 - disc_pct)) DIV 100
 """
     )
-    return spark.sql(
-        """
+    return star_sql(spark, sf_dir, """
 SELECT l_returnflag,
        COUNT(*) AS n_lines,
        SUM(modernsql_net_cents(
              CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT),
              CAST(floor(l_discount * 100 + 0.5) AS BIGINT))) AS net_cents_total
-FROM modernsql_lineitem
+FROM {lineitem}
 GROUP BY l_returnflag
-"""
-    )
+""")
 
 
 @register(
@@ -145,7 +144,6 @@ FROM spine s LEFT JOIN agg a ON s.bracket = a.bracket
 """,
 )
 def sql_table_udf_price_brackets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    table(spark, sf_dir, "orders").createOrReplaceTempView("modernsql_orders")
     spark.sql(
         """
 CREATE OR REPLACE TEMPORARY FUNCTION modernsql_brackets(lo BIGINT, hi BIGINT)
@@ -153,21 +151,19 @@ RETURNS TABLE(bracket BIGINT)
 RETURN SELECT explode(sequence(lo, hi)) AS bracket
 """
     )
-    return spark.sql(
-        """
+    return star_sql(spark, sf_dir, """
 WITH agg AS (
   SELECT least(CAST(floor(o_totalprice) AS BIGINT) DIV 50000, 9L) AS bracket,
          COUNT(*) AS n_orders,
          SUM(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS cents_total
-  FROM modernsql_orders
+  FROM {orders}
   GROUP BY 1
 )
 SELECT s.bracket,
        COALESCE(a.n_orders, 0L) AS n_orders,
        COALESCE(a.cents_total, 0L) AS cents_total
 FROM modernsql_brackets(0, 9) s LEFT JOIN agg a ON s.bracket = a.bracket
-"""
-    )
+""")
 
 
 @register(
@@ -190,23 +186,20 @@ GROUP BY o_orderpriority
 """,
 )
 def session_variable_dynamic_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    table(spark, sf_dir, "orders").createOrReplaceTempView("modernsql_orders_sv")
     spark.sql("DECLARE OR REPLACE VARIABLE modernsql_win_start TIMESTAMP")
     spark.sql("DECLARE OR REPLACE VARIABLE modernsql_win_end TIMESTAMP")
     spark.sql("SET VAR modernsql_win_start = TIMESTAMP '1996-01-01 00:00:00'")
     spark.sql("SET VAR modernsql_win_end = TIMESTAMP '1996-07-01 00:00:00'")
-    return spark.sql(
-        """
+    return star_sql(spark, sf_dir, """
 EXECUTE IMMEDIATE
   'SELECT o_orderpriority,
           COUNT(*) AS n_orders,
           SUM(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS cents_total
-   FROM modernsql_orders_sv
+   FROM {orders}
    WHERE o_orderdate >= :win_start AND o_orderdate < :win_end
    GROUP BY o_orderpriority'
   USING (modernsql_win_start AS win_start, modernsql_win_end AS win_end)
-"""
-    )
+""")
 
 
 @register(
@@ -237,9 +230,8 @@ ORDER BY ALL
 """,
 )
 def sql_sugar_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    table(spark, sf_dir, "orders").createOrReplaceTempView("modernsql_orders_sugar")
     spark.sql("DECLARE OR REPLACE VARIABLE modernsql_sugar_tbl STRING")
-    spark.sql("SET VAR modernsql_sugar_tbl = 'modernsql_orders_sugar'")
+    star_sql(spark, sf_dir, "SET VAR modernsql_sugar_tbl = '{orders}'")
     return spark.sql(
         """
 WITH per_order AS (
@@ -276,17 +268,13 @@ GROUP BY n_name
 """,
 )
 def listagg_nation_supplier_roster(spark: SparkSession, sf_dir: str) -> DataFrame:
-    table(spark, sf_dir, "supplier").createOrReplaceTempView("modernsql_supplier")
-    table(spark, sf_dir, "nation").createOrReplaceTempView("modernsql_nation")
-    return spark.sql(
-        """
+    return star_sql(spark, sf_dir, """
 SELECT n_name,
        COUNT(*) AS n_suppliers,
        listagg(s_name, ',') WITHIN GROUP (ORDER BY s_name) AS roster
-FROM modernsql_supplier JOIN modernsql_nation ON s_nationkey = n_nationkey
+FROM {supplier} JOIN {nation} ON s_nationkey = n_nationkey
 GROUP BY n_name
-"""
-    )
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -331,25 +319,22 @@ LIMIT 1
 """,
 )
 def sql_scripting_procedural_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    table(spark, sf_dir, "orders").createOrReplaceTempView("scripting_orders")
-    return spark.sql(
-        """
+    return star_sql(spark, sf_dir, """
 BEGIN
   DECLARE total BIGINT;
   DECLARE cum BIGINT DEFAULT 0;
   DECLARE k INT DEFAULT 0;
   SET total = (SELECT CAST(SUM(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT)
-               FROM scripting_orders);
+               FROM {orders});
   WHILE cum * 2 < total DO
     SET k = k + 1;
     SET cum = (SELECT CAST(SUM(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT)
-               FROM scripting_orders
+               FROM {orders}
                WHERE o_orderdate < add_months(DATE '1995-01-01', k * 3));
   END WHILE;
   SELECT k AS k_quarters, cum AS cum_cents, total AS total_cents;
 END
-"""
-    )
+""")
 
 
 # ---------------------------------------------------------------------------

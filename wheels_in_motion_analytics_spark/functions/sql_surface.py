@@ -1,8 +1,8 @@
 """Modern SQL surface: recursive CTEs (Spark 4), parameterized SQL, and
 mergeable HLL sketch roll-ups.
 
-These run through ``spark.sql`` over temp views registered inside the
-callable (vanilla-driver-session safe — no session-factory configs).
+These run through ``tables.star_sql`` over the session's star views
+(vanilla-driver-session safe — no session-factory configs).
 
 Recursive-CTE limits probed, not assumed: Spark 4.1 supports UNION ALL
 recursion only (``UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE``), so the
@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
 from wheels_in_motion_analytics_spark.registry import register
-from wheels_in_motion_analytics_spark.tables import table
+from wheels_in_motion_analytics_spark.tables import star_sql, table
 
 
 @register(
@@ -45,8 +45,7 @@ GROUP BY month_start
 """,
 )
 def recursive_month_series_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    table(spark, sf_dir, "orders").createOrReplaceTempView("sqlsurface_orders")
-    return spark.sql("""
+    return star_sql(spark, sf_dir, """
 WITH RECURSIVE months(month_start) AS (
   SELECT TIMESTAMP_NTZ '1995-01-01 00:00:00'
   UNION ALL
@@ -57,7 +56,7 @@ SELECT month_start,
        COUNT(o_orderkey) AS n_orders,
        CAST(COALESCE(SUM(CAST(o_totalprice AS DECIMAL(18,4))), 0) AS DOUBLE) AS total_value
 FROM months
-LEFT JOIN sqlsurface_orders ON date_trunc('month', o_orderdate) = month_start
+LEFT JOIN {orders} ON date_trunc('month', o_orderdate) = month_start
 GROUP BY month_start
 """)
 
@@ -79,13 +78,14 @@ GROUP BY o_orderpriority
 """,
 )
 def parameterized_sql_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    table(spark, sf_dir, "orders").createOrReplaceTempView("sqlsurface_orders")
-    return spark.sql(
+    return star_sql(
+        spark,
+        sf_dir,
         """
 SELECT o_orderpriority,
        COUNT(*) AS n_orders,
        CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total_value
-FROM sqlsurface_orders
+FROM {orders}
 WHERE o_orderstatus = :status AND o_totalprice >= :min_total
 GROUP BY o_orderpriority
 """,
@@ -343,23 +343,18 @@ LATERAL (
 """,
 )
 def lateral_topk_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from wheels_in_motion_analytics_spark.tables import register_views
-
-    register_views(spark, sf_dir, ["nation", "customer"])
-    return spark.sql(
-        """
-        SELECT n.n_name AS nation, top.c_custkey, top.cents
-        FROM nation n,
-        LATERAL (
-          SELECT c_custkey,
-                 CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) AS cents
-          FROM customer c
-          WHERE c.c_nationkey = n.n_nationkey
-          ORDER BY cents DESC, c_custkey
-          LIMIT 2
-        ) top
-        """
-    )
+    return star_sql(spark, sf_dir, """
+SELECT n.n_name AS nation, top.c_custkey, top.cents
+FROM {nation} n,
+LATERAL (
+  SELECT c_custkey,
+         CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) AS cents
+  FROM {customer} c
+  WHERE c.c_nationkey = n.n_nationkey
+  ORDER BY cents DESC, c_custkey
+  LIMIT 2
+) top
+""")
 
 
 @register(
@@ -464,9 +459,8 @@ HAVING COUNT(*) > 100
 """,
 )
 def sql_pipe_syntax_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    table(spark, sf_dir, "lineitem").createOrReplaceTempView("pipe_lineitem")
-    return spark.sql("""
-FROM pipe_lineitem
+    return star_sql(spark, sf_dir, """
+FROM {lineitem}
 |> WHERE l_shipdate <= TIMESTAMP_NTZ '1998-09-02 00:00:00'
 |> EXTEND CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT)
      AS net_cents

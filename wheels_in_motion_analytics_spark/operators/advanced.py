@@ -16,7 +16,7 @@ import pyspark.sql.functions as F
 
 from wheels_in_motion_analytics_spark.compat import oracle_dsum
 from wheels_in_motion_analytics_spark.registry import register
-from wheels_in_motion_analytics_spark.tables import table
+from wheels_in_motion_analytics_spark.tables import star_sql, table
 
 ORDER_STATUSES = ["F", "O", "P"]
 
@@ -78,19 +78,11 @@ WHERE o_totalprice > (SELECT {oracle_dsum('o_totalprice')} / COUNT(*) FROM order
 """,
 )
 def scalar_subquery_above_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from wheels_in_motion_analytics_spark.tables import register_views
-
-    register_views(spark, sf_dir, ["orders"])
-    return spark.sql(
-        """
-        SELECT o_orderkey, o_totalprice
-        FROM orders
-        WHERE o_totalprice > (
-          SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*)
-          FROM orders
-        )
-        """
-    )
+    return star_sql(spark, sf_dir, f"""
+SELECT o_orderkey, o_totalprice
+FROM {{orders}}
+WHERE o_totalprice > (SELECT {oracle_dsum('o_totalprice')} / COUNT(*) FROM {{orders}})
+""")
 
 
 @register(
@@ -110,21 +102,16 @@ WHERE EXISTS (
 """,
 )
 def correlated_exists_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from wheels_in_motion_analytics_spark.tables import register_views
-
-    register_views(spark, sf_dir, ["customer", "orders"])
-    return spark.sql(
-        """
-        SELECT c_custkey, c_name
-        FROM customer c
-        WHERE EXISTS (
-          SELECT 1 FROM orders o
-          WHERE o.o_custkey = c.c_custkey
-            AND o.o_orderpriority = '1-URGENT'
-            AND o.o_totalprice > 150000
-        )
-        """
-    )
+    return star_sql(spark, sf_dir, """
+SELECT c_custkey, c_name
+FROM {customer} c
+WHERE EXISTS (
+  SELECT 1 FROM {orders} o
+  WHERE o.o_custkey = c.c_custkey
+    AND o.o_orderpriority = '1-URGENT'
+    AND o.o_totalprice > 150000
+)
+""")
 
 
 @register(
@@ -138,16 +125,11 @@ WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_size > 40)
 """,
 )
 def in_subquery_hot_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from wheels_in_motion_analytics_spark.tables import register_views
-
-    register_views(spark, sf_dir, ["lineitem", "part"])
-    return spark.sql(
-        """
-        SELECT l_orderkey, l_partkey, l_quantity
-        FROM lineitem
-        WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_size > 40)
-        """
-    )
+    return star_sql(spark, sf_dir, """
+SELECT l_orderkey, l_partkey, l_quantity
+FROM {lineitem}
+WHERE l_partkey IN (SELECT p_partkey FROM {part} WHERE p_size > 40)
+""")
 
 
 @register(

@@ -19,7 +19,7 @@ import pyspark.sql.functions as F
 
 from wheels_in_motion_analytics_spark.compat import davg, dsum, oracle_davg, oracle_dsum
 from wheels_in_motion_analytics_spark.registry import register
-from wheels_in_motion_analytics_spark.tables import local_frame, table
+from wheels_in_motion_analytics_spark.tables import local_frame, star_sql, table
 
 
 def null_profile(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
@@ -74,13 +74,13 @@ LIMIT 5
 """,
 )
 def group_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        table(spark, sf_dir, "orders")
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("num_orders"))
-        .orderBy(F.desc("num_orders"), F.asc("o_orderpriority"))
-        .limit(5)
-    )
+    return star_sql(spark, sf_dir, """
+SELECT o_orderpriority, COUNT(*) AS num_orders
+FROM {orders}
+GROUP BY o_orderpriority
+ORDER BY num_orders DESC, o_orderpriority ASC
+LIMIT 5
+""")
 
 
 @register(
@@ -294,16 +294,11 @@ GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
 """,
 )
 def grouping_sets_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from wheels_in_motion_analytics_spark.tables import register_views
-
-    register_views(spark, sf_dir, ["orders"])
-    return spark.sql(
-        """
-        SELECT o_orderstatus, o_orderpriority, COUNT(*) AS num_orders
-        FROM orders
-        GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-        """
-    )
+    return star_sql(spark, sf_dir, """
+SELECT o_orderstatus, o_orderpriority, COUNT(*) AS num_orders
+FROM {orders}
+GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
+""")
 
 
 @register(

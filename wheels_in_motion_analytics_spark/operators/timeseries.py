@@ -1233,6 +1233,31 @@ from wheels_in_motion_analytics_spark.registry import REGISTRY as _REGISTRY  # n
 _REGISTRY["acf_daily_revenue"].oracle = _acf_oracle()
 
 
+def theil_sen_pairs(d: DataFrame) -> DataFrame:
+    """Every pair of days ``da < db`` of a ``(day, cents)`` relation with
+    its slope in cents/day, scaled by 2^20 and truncated toward zero.
+
+    The ``CASE`` guards the division on its own: a filter on
+    ``slope_scaled`` (a selection round's range) may be pushed into the
+    join condition and evaluated before ``db > da``, and on a same-day
+    pair ``datediff`` is 0 (``DIVIDE_BY_ZERO`` under ANSI mode).
+    """
+    a = d.select(F.col("day").alias("da"), F.col("cents").alias("ca"))
+    b = d.select(F.col("day").alias("db"), F.col("cents").alias("cb"))
+    return (
+        a.crossJoin(b)
+        .where(F.col("db") > F.col("da"))
+        .select(
+            "da",
+            "db",
+            F.expr(
+                "CASE WHEN db > da THEN CAST(((cb - ca) * CAST(1048576 AS BIGINT))"
+                " DIV datediff(db, da) AS BIGINT) END"
+            ).alias("slope_scaled"),
+        )
+    )
+
+
 @register(
     "theil_sen_trend_daily",
     category="timeseries",
@@ -1285,21 +1310,9 @@ def theil_sen_trend_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint()  # bounded day relation, used on both pair sides
     )
-    a = d.select(F.col("day").alias("da"), F.col("cents").alias("ca"))
-    b = d.select(F.col("day").alias("db"), F.col("cents").alias("cb"))
-    p = (
-        a.crossJoin(b)
-        .where(F.col("db") > F.col("da"))
-        .select(
-            "da",
-            "db",
-            F.expr(
-                "CAST(((cb - ca) * CAST(1048576 AS BIGINT))"
-                " DIV datediff(db, da) AS BIGINT)"
-            ).alias("slope_scaled"),
-        )
+    vals, n_pairs = rank_values(
+        theil_sen_pairs(d), "slope_scaled", lambda n: [(n + 1) // 2]
     )
-    vals, n_pairs = rank_values(p, "slope_scaled", lambda n: [(n + 1) // 2])
     (median,) = vals.values()
     # scalars are exact products of distributed jobs; surface them as the
     # 1-row result relation

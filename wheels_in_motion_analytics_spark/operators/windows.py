@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 import pyspark.sql.functions as F
 
 from wheels_in_motion_analytics_spark.registry import register
-from wheels_in_motion_analytics_spark.tables import local_frame, table
+from wheels_in_motion_analytics_spark.tables import local_frame, star_sql, table
 
 
 @register(
@@ -65,16 +65,14 @@ FROM orders
 """,
 )
 def window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy(F.asc("o_orderdate"), F.asc("o_orderkey"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return table(spark, sf_dir, "orders").select(
-        "o_custkey",
-        "o_orderkey",
-        F.sum(F.col("o_totalprice").cast("decimal(18,4)")).over(w).cast("double").alias("running_spend"),
-    )
+    return star_sql(spark, sf_dir, """
+SELECT o_custkey, o_orderkey,
+       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4)))
+            OVER (PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC
+                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
+         AS running_spend
+FROM {orders}
+""")
 
 
 @register(
@@ -676,6 +674,9 @@ def group_exact_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     sel = rank_values(o, "cents", want, group_col="grp")
     rows = []
     for g, (vals, n) in sorted(sel.items()):
+        if n == 0:  # all-NULL group: NULL percentiles
+            rows.append((g, 0, None, None, None))
+            continue
         row = [g, n]
         for k in (1, 2, 3):
             m = k * (n - 1)
@@ -733,9 +734,10 @@ def rank_values(df: DataFrame, col: str, ranks, group_col: str | None = None):
     ``ranks`` is a list of 1-based target ranks or a callable ``n ->
     list[int]`` resolved against each group's size. NULL values are
     ignored (``percentile()`` semantics); a NULL group key is a group of
-    its own. Returns ``({rank: value}, n_rows)`` without ``group_col`` —
-    raising ``ValueError`` on an empty relation — and ``{group: ({rank:
-    value}, n_rows)}`` with it (``{}`` when empty).
+    its own, and a group whose values are all NULL is kept as ``({}, 0)``.
+    Returns ``({rank: value}, n_rows)`` without ``group_col`` — raising
+    ``ValueError`` on an empty or all-NULL relation — and ``{group:
+    ({rank: value}, n_rows)}`` with it (``{}`` when empty).
 
     One job sizes every group (min, max, count), then ONE job per round
     serves ALL groups and ALL targets: every target starts from its
@@ -756,21 +758,22 @@ def rank_values(df: DataFrame, col: str, ranks, group_col: str | None = None):
     keys = [] if group_col is None else ["g"]
     src = (
         df.select(*[F.col(group_col).alias(k) for k in keys], F.col(col).alias("v"))
-        .where(F.col("v").isNotNull())
         # lazy: the min/max/count job below materializes the blocks
         .localCheckpoint(eager=False)
     )
+    # count(v), not count(*): an all-NULL group sizes to 0 in the same
+    # job; the rounds' range filters drop NULL values
     base = src.groupBy(*keys).agg(
-        F.min("v").alias("mn"), F.max("v").alias("mx"), F.count(F.lit(1)).alias("n")
+        F.min("v").alias("mn"), F.max("v").alias("mx"), F.count("v").alias("n")
     ).collect()
     out: dict = {}
     # (g, rank) -> (lo, hi, rank inside [lo, hi], rows in [lo, hi])
     live: dict[tuple, tuple[int, int, int, int]] = {}
     for row in base:
         g, n = (row["g"] if keys else None), row["n"]
-        if n == 0:  # the global aggregate of an empty relation
-            continue
         out[g] = ({}, n)
+        if n == 0:  # all NULL, or the global aggregate of an empty relation
+            continue
         for k in sorted(set(ranks(n) if callable(ranks) else ranks)):
             if not 1 <= k <= n:
                 raise ValueError(f"rank {k} outside 1..{n} for group {g!r}")
@@ -778,7 +781,7 @@ def rank_values(df: DataFrame, col: str, ranks, group_col: str | None = None):
                 out[g][0][k] = row["mn"]
             else:
                 live[(g, k)] = (row["mn"], row["mx"], k, n)
-    if not keys and not out:
+    if not keys and not out[None][1]:
         raise ValueError("rank selection over an empty relation")
     # live ranges never outnumber live targets, so every round gets at
     # least this many buckets per range — enough rounds to split any
@@ -840,7 +843,8 @@ def grouped_percentile_doubles(
 ) -> dict:
     """EXACT per-group continuous percentiles of a fixed-decimal DOUBLE
     column, BIT-IDENTICAL to Spark's ``percentile(col, frac)`` aggregate
-    (pinned by tests/test_operators.py), via :func:`rank_values`.
+    (pinned by tests/test_operators.py), via :func:`rank_values`. A group
+    whose values are all NULL gets NULL percentiles, as in ``percentile()``.
 
     Requires every value to be an exact multiple of ``1/scale`` with
     ``scale`` a power of ten (TPC-H money columns): then
@@ -872,6 +876,9 @@ def grouped_percentile_doubles(
     sel = rank_values(quant, "c", want, group_col="g")
     result = {}
     for g, (vals, n) in sel.items():
+        if n == 0:  # all-NULL group: NULL percentiles, as percentile()
+            result[g] = [None] * len(fracs)
+            continue
         outs = []
         for p in fracs:
             pos = p * (n - 1)

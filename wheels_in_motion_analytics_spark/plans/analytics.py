@@ -1,24 +1,33 @@
-"""Composed analytics queries over the star schema — dashboard-grade
+"""Composed analytics queries over the star schema: dashboard-grade
 multi-operator pipelines (join + filter + agg + top-k in one plan), the
 serving-layer workload a user of the reference runs via BigQuery/Looker
-(README.md:242-252) expressed directly on the engine.
+(README.md:242-252), expressed directly on the engine.
 
-All follow the flagship physical recipe (plans/enriched.py docstring):
-forced ``F.broadcast`` only on bounded dims (region/nation/supplier/part);
-``orders``/``customer`` are fact-scaled, so their joins carry NO hint and the
-optimizer chooses by measured size — broadcast at test scale, shuffle + AQE
-at 100 TB. One aggregation, deterministic top-k; revenue sums are
-decimal-accumulated (compat.py).
+Each tile is ONE SQL statement over the session's star views
+(``tables.star_sql``), mirroring its DuckDB oracle. Building it costs a
+handful of py4j round trips; the same plan through the ``Column`` API
+cost 100-800. The physical recipe lives in the SQL:
+
+* ``/*+ BROADCAST(...) */`` names only bounded dims (region, nation,
+  supplier, part; ``tables.BROADCASTABLE``). ``orders`` and ``customer``
+  are fact-scaled, so their joins carry NO hint and the optimizer picks by
+  measured size: broadcast at test scale, shuffle + AQE at 100 TB.
+* The FROM clause lists the joins in build order (fact first); Spark does
+  not reorder them without CBO, so the hints land where written.
+* Float sums and averages accumulate in decimal
+  (``compat.oracle_dsum``/``oracle_davg``, the SQL form of ``dsum``/
+  ``davg``); top-k orders are total (tiebreak on the group key).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-import pyspark.sql.functions as F
 
-from wheels_in_motion_analytics_spark.compat import davg, dsum, oracle_davg, oracle_dsum
+from wheels_in_motion_analytics_spark.compat import oracle_davg, oracle_dsum
 from wheels_in_motion_analytics_spark.registry import register
-from wheels_in_motion_analytics_spark.tables import table
+from wheels_in_motion_analytics_spark.tables import star_sql
+
+REVENUE = "l_extendedprice * (1 - l_discount)"
 
 
 @register(
@@ -42,31 +51,18 @@ LIMIT 10
 """,
 )
 def top_unshipped_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cutoff = F.lit("1998-03-15 00:00:00").cast("timestamp")
-    cust = (
-        table(spark, sf_dir, "customer")
-        .where(F.col("c_mktsegment") == "BUILDING")
-        .select("c_custkey")
-    )
-    orders = (
-        table(spark, sf_dir, "orders")
-        .where(F.col("o_orderdate") < cutoff)
-        .select("o_orderkey", "o_custkey", "o_orderdate")
-    )
-    li = (
-        table(spark, sf_dir, "lineitem")
-        .where(F.col("l_shipdate") > cutoff)
-        .select("l_orderkey", "l_extendedprice", "l_discount")
-    )
-    return (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .groupBy("l_orderkey", "o_orderdate")
-        .agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
-        .select("l_orderkey", "revenue", "o_orderdate")
-        .orderBy(F.desc("revenue"), F.asc("l_orderkey"))
-        .limit(10)
-    )
+    return star_sql(spark, sf_dir, f"""
+SELECT l_orderkey, {oracle_dsum(REVENUE)} AS revenue, o_orderdate
+FROM {{lineitem}}
+JOIN {{orders}}   ON l_orderkey = o_orderkey
+JOIN {{customer}} ON o_custkey = c_custkey
+WHERE c_mktsegment = 'BUILDING'
+  AND o_orderdate < TIMESTAMP_NTZ '1998-03-15 00:00:00'
+  AND l_shipdate  > TIMESTAMP_NTZ '1998-03-15 00:00:00'
+GROUP BY l_orderkey, o_orderdate
+ORDER BY revenue DESC, l_orderkey ASC
+LIMIT 10
+""")
 
 
 @register(
@@ -87,23 +83,18 @@ LIMIT 20
 """,
 )
 def returned_item_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = (
-        table(spark, sf_dir, "lineitem")
-        .where(F.col("l_returnflag") == "R")
-        .select("l_orderkey", "l_extendedprice", "l_discount")
-    )
-    orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    cust = table(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_nationkey")
-    nation = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    return (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .groupBy("c_custkey", "c_name", "n_name")
-        .agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("lost_revenue"))
-        .orderBy(F.desc("lost_revenue"), F.asc("c_custkey"))
-        .limit(20)
-    )
+    return star_sql(spark, sf_dir, f"""
+SELECT /*+ BROADCAST(nation) */
+       c_custkey, c_name, n_name, {oracle_dsum(REVENUE)} AS lost_revenue
+FROM {{lineitem}}
+JOIN {{orders}}        ON l_orderkey = o_orderkey
+JOIN {{customer}}      ON o_custkey = c_custkey
+JOIN {{nation}} nation ON c_nationkey = n_nationkey
+WHERE l_returnflag = 'R'
+GROUP BY c_custkey, c_name, n_name
+ORDER BY lost_revenue DESC, c_custkey ASC
+LIMIT 20
+""")
 
 
 @register(
@@ -130,38 +121,22 @@ GROUP BY 1
 """,
 )
 def regional_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
-    )
-    orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_orderdate")
-    cust = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n1 = table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("c_nk"), F.col("n_regionkey")
-    )
-    region = table(spark, sf_dir, "region")
-    supp = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n2 = table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation")
-    )
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    df = (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(n1), F.col("c_nationkey") == F.col("c_nk"))
-        .join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
-        .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(n2), F.col("s_nationkey") == F.col("s_nk"))
-        .where(F.col("r_name") == "ASIA")
-    )
-    return (
-        df.groupBy(F.year("o_orderdate").cast("int").alias("order_year"))
-        .agg(
-            (
-                dsum(F.when(F.col("supp_nation") == "NATION_7", rev).otherwise(0.0))
-                / dsum(rev)
-            ).alias("market_share")
-        )
-    )
+    nation_rev = f"CASE WHEN n2.n_name = 'NATION_7' THEN {REVENUE} ELSE 0 END"
+    return star_sql(spark, sf_dir, f"""
+SELECT /*+ BROADCAST(n1, region, supplier, n2) */
+       CAST(year(o_orderdate) AS INT) AS order_year,
+       {oracle_dsum(nation_rev)} / {oracle_dsum(REVENUE)} AS market_share
+FROM {{lineitem}}
+JOIN {{orders}}            ON l_orderkey = o_orderkey
+JOIN {{customer}}          ON o_custkey = c_custkey
+JOIN {{nation}} n1         ON c_nationkey = n1.n_nationkey
+JOIN {{region}} region     ON n1.n_regionkey = r_regionkey
+JOIN {{supplier}} supplier ON l_suppkey = s_suppkey
+JOIN {{nation}} n2         ON s_nationkey = n2.n_nationkey
+WHERE r_name = 'ASIA'
+GROUP BY 1
+""")
+
 
 @register(
     "priority_shipping_summary",
@@ -181,22 +156,16 @@ GROUP BY o_orderpriority
 """,
 )
 def priority_shipping_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = table(spark, sf_dir, "lineitem").where(
-        (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
-    )
-    orders = table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderstatus", "o_orderpriority"
-    )
-    return (
-        li.select("l_orderkey")
-        .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy("o_orderpriority")
-        .agg(
-            F.count(F.when(F.col("o_orderstatus") == "F", 1)).alias("finished_items"),
-            F.count(F.when(F.col("o_orderstatus") != "F", 1)).alias("open_items"),
-        )
-    )
+    return star_sql(spark, sf_dir, """
+SELECT o_orderpriority,
+       COUNT(*) FILTER (WHERE o_orderstatus = 'F') AS finished_items,
+       COUNT(*) FILTER (WHERE o_orderstatus <> 'F') AS open_items
+FROM {lineitem}
+JOIN {orders} ON l_orderkey = o_orderkey
+WHERE l_shipdate >= TIMESTAMP_NTZ '1997-01-01 00:00:00'
+  AND l_shipdate <  TIMESTAMP_NTZ '1998-01-01 00:00:00'
+GROUP BY o_orderpriority
+""")
 
 
 @register(
@@ -224,25 +193,25 @@ GROUP BY l_returnflag, l_linestatus
 """,
 )
 def pricing_summary_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = table(spark, sf_dir, "lineitem").where(
-        F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp")
-    )
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     # The 3-factor product carries enough float precision that the two
     # engines' double->DECIMAL(18,4) casts round a few rows differently;
     # quantize to an exact integer grid instead (floor(x+0.5) — identical
     # IEEE ops on both engines; see functions/udfs.py grouped_map_demean).
-    charge_q = F.floor(disc_price * (1 + F.col("l_tax")) * 10000 + 0.5)
-    return li.groupBy("l_returnflag", "l_linestatus").agg(
-        dsum("l_quantity").alias("sum_qty"),
-        dsum("l_extendedprice").alias("sum_base_price"),
-        dsum(disc_price).alias("sum_disc_price"),
-        (F.sum(charge_q).cast("double") / 10000.0).alias("sum_charge"),
-        davg("l_quantity").alias("avg_qty"),
-        davg("l_extendedprice").alias("avg_price"),
-        davg("l_discount").alias("avg_disc"),
-        F.count(F.lit(1)).alias("count_order"),
-    )
+    return star_sql(spark, sf_dir, f"""
+SELECT l_returnflag, l_linestatus,
+       {oracle_dsum('l_quantity')} AS sum_qty,
+       {oracle_dsum('l_extendedprice')} AS sum_base_price,
+       {oracle_dsum(REVENUE)} AS sum_disc_price,
+       CAST(SUM(CAST(FLOOR({REVENUE} * (1 + l_tax) * 10000 + 0.5)
+                     AS BIGINT)) AS DOUBLE) / 10000.0 AS sum_charge,
+       {oracle_davg('l_quantity')} AS avg_qty,
+       {oracle_davg('l_extendedprice')} AS avg_price,
+       {oracle_davg('l_discount')} AS avg_disc,
+       COUNT(*) AS count_order
+FROM {{lineitem}}
+WHERE l_shipdate <= TIMESTAMP_NTZ '1998-09-02 00:00:00'
+GROUP BY l_returnflag, l_linestatus
+""")
 
 
 @register(
@@ -263,18 +232,12 @@ WHERE l_shipdate >= TIMESTAMP '1997-06-01 00:00:00'
 """,
 )
 def promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = table(spark, sf_dir, "lineitem").where(
-        (F.col("l_shipdate") >= F.lit("1997-06-01 00:00:00").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1997-07-01 00:00:00").cast("timestamp"))
-    )
-    part = table(spark, sf_dir, "part").select("p_partkey", "p_type")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        li.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
-        .agg(
-            (
-                dsum(F.when(F.col("p_type") == "PROMO", rev).otherwise(0.0))
-                / dsum(rev)
-            ).alias("promo_share")
-        )
-    )
+    promo_rev = f"CASE WHEN p_type = 'PROMO' THEN {REVENUE} ELSE 0 END"
+    return star_sql(spark, sf_dir, f"""
+SELECT /*+ BROADCAST(part) */
+       {oracle_dsum(promo_rev)} / {oracle_dsum(REVENUE)} AS promo_share
+FROM {{lineitem}}
+JOIN {{part}} part ON l_partkey = p_partkey
+WHERE l_shipdate >= TIMESTAMP_NTZ '1997-06-01 00:00:00'
+  AND l_shipdate <  TIMESTAMP_NTZ '1997-07-01 00:00:00'
+""")

@@ -1,58 +1,36 @@
 """Enriched star-join plan — the engine's flagship pipeline.
 
 Re-expresses the reference's serving-layer pattern: the materialized
-``journeys_enriched`` table (fact joined to every dimension,
-/root/reference/README.md:224,321) feeding dashboard aggregations like "Rides
+``journeys_enriched`` table (fact joined to every dimension, the
+reference's README.md:224,321) feeding dashboard aggregations like "Rides
 By Station Name" (group-count, sort desc, top-k —
 images/analytics_dashboard_2.PNG). Here the star is
-lineitem ⋈ orders ⋈ customer ⋈ nation ⋈ region.
+lineitem ⋈ orders ⋈ customer ⋈ nation ⋈ region, and each tile is one SQL
+statement over the session's star views (``tables.star_sql``), as a
+Looker tile is one query over the registered BigQuery tables.
 
-Physical strategy: explicit ``F.broadcast`` hints ONLY on the bounded
-dimensions (region/nation — `tables.BROADCASTABLE`). ``orders`` and
-``customer`` are FACT-scaled (they grow linearly with sf; ~10^10 rows at
-100 TB), so forcing a broadcast on them would OOM every executor at scale —
-instead their joins carry no hint and the optimizer picks the strategy by
-measured size: at test scale they still resolve to broadcast hash joins
-(under the 10 MB auto-broadcast threshold), at 100 TB they degrade gracefully
-to shuffle joins that AQE can re-plan (skew split, local hash). That
-size-gated decision — never a forced hint on an sf-scaling input — is the
-plan that survives a 100 TB fact table; `tests/test_plan_shapes.py`
-(`test_no_forced_broadcast_on_fact_tables`) pins it by disabling the
-auto-threshold and asserting the fact joins fall back to shuffle joins.
+Physical strategy, written as SQL hints: ``/*+ BROADCAST(...) */`` names
+ONLY the bounded dimensions (region/nation — ``tables.BROADCASTABLE``).
+``orders`` and ``customer`` are FACT-scaled (they grow linearly with sf;
+~10^10 rows at 100 TB), so forcing a broadcast on them would OOM every
+executor at scale — instead their joins carry no hint and the optimizer
+picks the strategy by measured size: at test scale they still resolve to
+broadcast hash joins (under the 10 MB auto-broadcast threshold), at 100 TB
+they degrade gracefully to shuffle joins that AQE can re-plan (skew split,
+local hash). That size-gated decision — never a forced hint on an
+sf-scaling input — is the plan that survives a 100 TB fact table;
+`tests/test_plan_shapes.py` (`test_no_forced_broadcast_on_fact_tables`)
+pins it by disabling the auto-threshold and asserting the fact joins fall
+back to shuffle joins.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-import pyspark.sql.functions as F
 
-from wheels_in_motion_analytics_spark.compat import dsum
+from wheels_in_motion_analytics_spark.compat import oracle_dsum
 from wheels_in_motion_analytics_spark.registry import register
-from wheels_in_motion_analytics_spark.tables import table
-
-
-def enriched_lineitems(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """fact ⋈ all dims — the `journeys_enriched` analogue.
-
-    Kept as a reusable view-producing plan: serving queries compose on top of
-    it and Catalyst prunes the unused dimension columns per query.
-    """
-    lineitem = table(spark, sf_dir, "lineitem")
-    orders = table(spark, sf_dir, "orders")
-    customer = table(spark, sf_dir, "customer")
-    nation = table(spark, sf_dir, "nation")
-    region = table(spark, sf_dir, "region")
-
-    # No hint on orders/customer (fact-scaled — size-gated join choice);
-    # forced broadcast only for the bounded dims.
-    return (
-        lineitem.join(orders.select("o_orderkey", "o_custkey", "o_orderstatus", "o_orderdate"),
-                      F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(customer.select("c_custkey", "c_name", "c_nationkey", "c_mktsegment"),
-              F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
-    )
+from wheels_in_motion_analytics_spark.tables import star_sql
 
 
 @register(
@@ -73,11 +51,18 @@ GROUP BY r_name, n_name
 """,
 )
 def star_join_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = enriched_lineitems(spark, sf_dir)
-    return df.groupBy("r_name", "n_name").agg(
-        F.count(F.lit(1)).alias("num_items"),
-        dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"),
-    )
+    return star_sql(spark, sf_dir, f"""
+SELECT /*+ BROADCAST(nation, region) */
+       r_name, n_name,
+       COUNT(*) AS num_items,
+       {oracle_dsum("l_extendedprice * (1 - l_discount)")} AS revenue
+FROM {{lineitem}}
+JOIN {{orders}}        ON l_orderkey = o_orderkey
+JOIN {{customer}}      ON o_custkey = c_custkey
+JOIN {{nation}} nation ON c_nationkey = n_nationkey
+JOIN {{region}} region ON n_regionkey = r_regionkey
+GROUP BY r_name, n_name
+""")
 
 
 @register(
@@ -97,19 +82,14 @@ LIMIT 10
 """,
 )
 def flagship_rides_by_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lineitem = table(spark, sf_dir, "lineitem")
-    orders = table(spark, sf_dir, "orders")
-    customer = table(spark, sf_dir, "customer")
-    return (
-        lineitem.select("l_orderkey")
-        # fact⋈fact joins: no forced hint (see module docstring)
-        .join(orders.select("o_orderkey", "o_custkey"),
-              F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(customer.select("c_custkey", "c_name"),
-              F.col("o_custkey") == F.col("c_custkey"))
-        .groupBy("c_name")
-        .agg(F.count(F.lit(1)).alias("num_rides"))
-        # Deterministic top-k: tiebreak on the group key (SURVEY.md §4.3).
-        .orderBy(F.desc("num_rides"), F.asc("c_name"))
-        .limit(10)
-    )
+    # fact⋈fact joins: no hint (see module docstring); deterministic top-k
+    # with a tiebreak on the group key (SURVEY.md §4.3)
+    return star_sql(spark, sf_dir, """
+SELECT c_name, COUNT(*) AS num_rides
+FROM {lineitem}
+JOIN {orders}   ON l_orderkey = o_orderkey
+JOIN {customer} ON o_custkey = c_custkey
+GROUP BY c_name
+ORDER BY num_rides DESC, c_name ASC
+LIMIT 10
+""")

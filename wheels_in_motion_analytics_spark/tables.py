@@ -10,8 +10,12 @@ double-scans and is data-dependent; this engine treats inference as opt-in
 
 from __future__ import annotations
 
+import hashlib
 import os
+import re
+import weakref
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.types as T
 
@@ -246,12 +250,50 @@ def _events_table(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
-def register_views(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> None:
-    """Register each table as a temp view so SQL-form operators can run.
+# Star views registered by star_sql, per session: {view name: file stamp}.
+# Temp views belong to one session, so a new session starts empty.
+_STAR_VIEWS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_PLACEHOLDER = re.compile(r"\{([A-Za-z_]\w*)\}")
 
-    Mirrors the reference's mixed DF-API + SQL style where temp views feed a
-    SQL query in the same Catalyst plan
-    (journey-data-transformation.py:107-127).
+
+def star_sql(spark: SparkSession, sf_dir: str, text: str, args=None) -> DataFrame:
+    """Run SQL ``text`` over the star tables of ``sf_dir``.
+
+    ``{lineitem}``, ``{orders}``, ... name star tables. Each becomes a
+    temp view private to ``sf_dir`` (``star_<hash>_lineitem``), so a
+    user's own view named ``orders`` is neither read nor replaced. A view
+    is built through :func:`table` (declared schemas, the ``events``
+    dispatch) once per session and file stamp (path, size, mtime): later
+    calls reuse it, and a rewritten file is registered again. Building a
+    query this way costs a handful of py4j round trips, where the same
+    plan through the ``Column`` API costs hundreds.
+
+    A placeholder is an identifier in braces: other braces (a regex
+    ``{4}``, a JSON literal) are left alone, and an unknown ``{word}``
+    raises ``KeyError``, as :func:`table` does. ``args`` are the named or
+    positional parameters of ``spark.sql``.
     """
-    for name in names or TABLE_NAMES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)
+    root = sf_dir.rstrip("/")
+    prefix = f"star_{hashlib.md5(root.encode()).hexdigest()[:12]}_"
+    views = _STAR_VIEWS.setdefault(spark, {})
+
+    def view(match: re.Match) -> str:
+        name = match.group(1)
+        if name not in TABLE_NAMES:
+            raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
+        path = f"{root}/{name}.parquet"
+        st = os.stat(path)
+        stamp = (path, st.st_size, st.st_mtime_ns)
+        if views.get(prefix + name) != stamp:
+            table(spark, sf_dir, name).createOrReplaceTempView(prefix + name)
+            views[prefix + name] = stamp
+        return prefix + name
+
+    try:
+        return spark.sql(_PLACEHOLDER.sub(view, text), args)
+    except AnalysisException as e:
+        # a view dropped behind our back: register afresh, once
+        if e.getCondition() != "TABLE_OR_VIEW_NOT_FOUND":
+            raise
+        views.clear()
+        return spark.sql(_PLACEHOLDER.sub(view, text), args)
