@@ -48,7 +48,14 @@ _DRIVER_PRIORITY = [
     "returned_item_customers",
     "promo_revenue_share",
     "forecast_revenue_change",
-    # --- code changed THIS round (the r10 hostile-session-TZ axis found
+    # --- code changed since their last row: the CDC merge, the streaming
+    # upsert, the fanout state fold and the versioned reads now commit and
+    # read through the versioned table log
+    "cdc_merge_orders_state",
+    "stream_upsert_foreachbatch",
+    "stream_fanout_two_sinks",
+    "versioned_table_time_travel",
+    # --- code changed in round 10 (the r10 hostile-session-TZ axis found
     # instant-cast outputs; rewritten NTZ-native) — stale rows, re-queue
     # ahead of the freshness wave per the r10+ posture rule
     "stream_join_attribution",
@@ -102,16 +109,14 @@ _DRIVER_PRIORITY = [
     "stream_dedup_within_watermark",
     "stream_complete_mode_totals",
     "stream_stateful_running_totals",
-    "stream_upsert_foreachbatch",
     "stream_attribution_unmatched",
     "stream_static_enrich",
-    "stream_fanout_two_sinks",
     "stream_ingest_versioned_table",
     "stream_state_store_read",
     "session_window_builtin_batch",
 ]
 
-# The 43 already-verified names above (head positions 8-50). Re-verifying
+# The already-verified names above (head positions 8 onward). Re-verifying
 # them in r10 is DELIBERATE (r9 verdict item 2): after the 7-name tail the
 # driver's 50-row budget would otherwise fall on arbitrary re-confirmation.
 # tests/test_rotation_contract.py unions this set into the documented

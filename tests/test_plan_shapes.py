@@ -179,27 +179,44 @@ def test_orc_scan_pushes_down_filter(spark):
     assert "o_comment" not in plan  # column pruning
 
 
-def test_partitioned_cdc_merge_scan_prunes(spark, tmp_path):
-    """The partition-scoped MERGE's read of current state carries the dirty-
-    month partition filter — the scan never touches clean months."""
-    import os
+def test_partitioned_cdc_merge_scan_prunes(spark, tmp_path, monkeypatch):
+    """The partition-scoped MERGE's own read of current state opens only
+    the dirty months' files — clean months are never scanned."""
+    import re
 
     import pyspark.sql.functions as F
 
-    from wheels_in_motion_analytics_spark.sources import cdc
+    from wheels_in_motion_analytics_spark.sources import cdc, versioned
 
     path = str(tmp_path / "state")
-    data = os.path.join(path, "data")
-    cdc._base_state_partitioned(spark, SF_SMALL).localCheckpoint().repartition(
-        F.col("order_month")
-    ).write.mode("overwrite").partitionBy("order_month").parquet(data)
-    pruned = spark.read.parquet(data).where(
-        F.col("order_month").isin(cdc.DIRTY_MONTHS)
+    versioned.commit(
+        cdc._base_state_partitioned(spark, SF_SMALL).repartition(F.col("order_month")),
+        path,
+        mode="overwrite",
+        partition_col="order_month",
     )
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "order_month" in plan
-    n_files = pruned.select(F.input_file_name()).distinct().count()
-    assert n_files <= len(cdc.DIRTY_MONTHS)
+    reads = []
+    real_read = versioned.read_entries
+
+    def spy(*args, **kwargs):
+        reads.append(real_read(*args, **kwargs))
+        return reads[-1]
+
+    monkeypatch.setattr(versioned, "read_entries", spy)
+    assert cdc.merge_upsert(
+        spark, path, cdc._update_batch_months(spark, SF_SMALL),
+        ["order_id"], "version", "b1", partition_col="order_month",
+    )
+    (scan,) = reads
+    opened = scan.inputFiles()
+    months = {re.search(r"order_month=([^/]+)/", f).group(1) for f in opened}
+    assert months == set(cdc.DIRTY_MONTHS)
+    n_dirty = sum(
+        1
+        for e in versioned._manifest(path, 1)["files"]
+        if cdc._partition_value(e, "order_month") in cdc.DIRTY_MONTHS
+    )
+    assert len(opened) == n_dirty
 
 
 @pytest.mark.parametrize(

@@ -61,10 +61,11 @@ def test_bucketed_join_no_shuffle(spark, tmp_path):
 
 def test_cdc_merge_exactly_once(spark, tmp_path):
     """Storage-level MERGE: re-applying an already-applied batch id is a
-    no-op (ledger guard), new batches upsert by highest version."""
+    no-op (the id is in the head manifest), new batches upsert by highest
+    version, and every merge is one new version of the table."""
     import pyspark.sql.functions as F_
 
-    from wheels_in_motion_analytics_spark.sources import cdc
+    from wheels_in_motion_analytics_spark.sources import cdc, versioned
 
     path = str(tmp_path / "cdc_table")
     final = cdc.run_cdc_pipeline(spark, SF_SMALL, path)
@@ -77,28 +78,32 @@ def test_cdc_merge_exactly_once(spark, tmp_path):
     # updated keys carry version 2; untouched keys stay version 1
     v2 = final.where(F_.col("version") == 2).count()
     assert v2 == cdc._update_batch(spark, SF_SMALL).count()
-
-    # materialize now: `final` lazily reads files the next merge replaces
+    # the seed and one merge: the pipeline's re-apply committed nothing
+    assert versioned.current_version(path) == 2
     final_rows = sorted(map(tuple, final.collect()))
 
     # an explicit re-apply with the same batch id must refuse
     assert not cdc.merge_upsert(
         spark, path, cdc._update_batch(spark, SF_SMALL), ["order_id"], "version", "batch-1"
     )
+    assert versioned.current_version(path) == 2
     # a NEW batch id with the same payload applies, but changes nothing
     # (every row already at version 2 wins ties toward the update — state
     # stays identical)
     assert cdc.merge_upsert(
         spark, path, cdc._update_batch(spark, SF_SMALL), ["order_id"], "version", "batch-2"
     )
-    again = spark.read.parquet(f"{path}/data").select(*cdc._BASE_COLS)
+    assert versioned.head(path)[1]["batch_ids"] == ["batch-1", "batch-2"]
+    again = versioned.read_version(spark, path).select(*cdc._BASE_COLS)
     assert sorted(map(tuple, again.collect())) == final_rows
+    # the merges never touched the seed's files: v1 still reads as the seed
+    assert versioned.read_version(spark, path, 1).count() == n_base
 
 
 def test_cdc_merge_rejects_feed_missing_stored_columns(spark, tmp_path):
-    """r11 ADVICE fix: a feed missing a stored table column must fail
-    loudly — the explicit-schema read would otherwise NULL the column and
-    the merge would rewrite it away."""
+    """A feed missing a stored table column must fail loudly — the
+    explicit-schema read would otherwise NULL the column and the merge
+    would rewrite it away."""
     import pytest
 
     from wheels_in_motion_analytics_spark.sources import cdc
@@ -110,50 +115,177 @@ def test_cdc_merge_rejects_feed_missing_stored_columns(spark, tmp_path):
         cdc.merge_upsert(spark, path, crippled, ["order_id"], "version", "batch-x")
 
 
+def _month_entries(root: str, version: int) -> dict[str, set[str]]:
+    from wheels_in_motion_analytics_spark.sources import cdc, versioned
+
+    by_month: dict[str, set[str]] = {}
+    for e in versioned._manifest(root, version)["files"]:
+        by_month.setdefault(cdc._partition_value(e, "order_month"), set()).add(e)
+    return by_month
+
+
+def _seed_partitioned(spark, root: str) -> None:
+    import pyspark.sql.functions as F_
+
+    from wheels_in_motion_analytics_spark.sources import cdc, versioned
+
+    versioned.commit(
+        cdc._base_state_partitioned(spark, SF_SMALL).repartition(F_.col("order_month")),
+        root,
+        mode="overwrite",
+        partition_col="order_month",
+    )
+
+
 def test_partition_overwrite_cdc_touches_only_dirty_months(spark, tmp_path):
-    """Dynamic-partition-overwrite MERGE: untouched month directories keep
-    their files byte-for-byte; dirty months are rewritten; result matches
-    the whole-table merge semantics (registry oracle pins values)."""
+    """Partition-scoped MERGE commit (remove+add): the clean months keep
+    their manifest entries and their files' (mtime, size); the dirty
+    months' entries are replaced; only dirty-month rows change."""
     import os
 
     import pyspark.sql.functions as F_
 
-    from wheels_in_motion_analytics_spark.sources import cdc
+    from wheels_in_motion_analytics_spark.sources import cdc, versioned
 
     path = str(tmp_path / "state")
-    data = os.path.join(path, "data")
-    base = cdc._base_state_partitioned(spark, SF_SMALL).localCheckpoint()
-    base.repartition(F_.col("order_month")).write.mode("overwrite").partitionBy(
-        "order_month"
-    ).parquet(data)
-    spark.createDataFrame([], cdc._LEDGER_SCHEMA).write.mode("overwrite").parquet(
-        cdc._ledger_path(path)
-    )
+    _seed_partitioned(spark, path)
 
-    def snapshot(month):
-        d = os.path.join(data, f"order_month={month}")
-        return {
-            f: (os.path.getmtime(os.path.join(d, f)), os.path.getsize(os.path.join(d, f)))
-            for f in os.listdir(d)
-            if not f.startswith(".")
-        }
+    def stats(entries):
+        files = [os.path.join(versioned._data_dir(path), e) for e in sorted(entries)]
+        return [(os.path.getmtime(f), os.path.getsize(f)) for f in files]
 
-    clean_before = snapshot("1996-01")
-    dirty_before = snapshot("1997-03")
+    before = _month_entries(path, 1)
+    stats_before = {m: stats(es) for m, es in before.items()}
 
-    assert cdc.merge_upsert_partitioned(
+    assert cdc.merge_upsert(
         spark, path, cdc._update_batch_months(spark, SF_SMALL),
-        ["order_id"], "version", "order_month", "b1",
+        ["order_id"], "version", "b1", partition_col="order_month",
     )
 
-    assert snapshot("1996-01") == clean_before  # untouched partition intact
-    assert snapshot("1997-03") != dirty_before  # dirty partition rewritten
+    after = _month_entries(path, 2)
+    clean = set(before) - set(cdc.DIRTY_MONTHS)
+    assert clean and set(after) == set(before)
+    for m in clean:  # untouched partitions: same entries, same files
+        assert after[m] == before[m]
+        assert stats(after[m]) == stats_before[m]
+    for m in cdc.DIRTY_MONTHS:  # dirty partitions: new files only
+        assert after[m].isdisjoint(before[m])
 
     # only dirty-month rows changed vs the seed
-    final = spark.read.parquet(data)
+    final = versioned.read_version(spark, path)
     changed = final.where(F_.col("version") == 2)
     assert {r.order_month for r in changed.select("order_month").distinct().collect()} == set(
         cdc.DIRTY_MONTHS
+    )
+    assert versioned.read_version(spark, path, 1).where(F_.col("version") == 2).count() == 0
+
+
+_FEED_SCHEMA = "order_id BIGINT, status STRING, version INT"
+
+
+def test_cdc_merge_crash_before_publish_leaves_head_and_retries_once(
+    spark, tmp_path, monkeypatch
+):
+    """A crash between staging the merged files and publishing the manifest
+    leaves the head and its batch ids unchanged; the retry applies once."""
+    import pytest
+
+    from wheels_in_motion_analytics_spark.sources import cdc, versioned
+
+    root = str(tmp_path / "t")
+    versioned.commit(
+        spark.createDataFrame([(1, "a", 1), (2, "b", 1)], _FEED_SCHEMA), root, mode="overwrite"
+    )
+    feed = spark.createDataFrame([(2, "B", 2), (3, "C", 2)], _FEED_SCHEMA)
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("crash before publish")
+
+    with monkeypatch.context() as m:
+        m.setattr(versioned, "_publish", crash)
+        with pytest.raises(RuntimeError, match="crash"):
+            cdc.merge_upsert(spark, root, feed, ["order_id"], "version", "b1")
+    version, head = versioned.head(root)
+    assert version == 1 and "batch_ids" not in head
+    assert sorted(map(tuple, versioned.read_version(spark, root).collect())) == [
+        (1, "a", 1), (2, "b", 1)
+    ]
+
+    assert cdc.merge_upsert(spark, root, feed, ["order_id"], "version", "b1")
+    assert not cdc.merge_upsert(spark, root, feed, ["order_id"], "version", "b1")
+    version, head = versioned.head(root)
+    assert version == 2 and head["batch_ids"] == ["b1"]
+    assert sorted(map(tuple, versioned.read_version(spark, root).collect())) == [
+        (1, "a", 1), (2, "B", 2), (3, "C", 2)
+    ]
+
+
+def test_cdc_merges_from_same_base_conflict(spark, tmp_path, monkeypatch):
+    """Two merges that read the same head: the first commits, the second
+    raises VersionConflict instead of overwriting the first's update."""
+    import pytest
+
+    from wheels_in_motion_analytics_spark.sources import cdc, versioned
+
+    root = str(tmp_path / "t")
+    versioned.commit(spark.createDataFrame([(1, "a", 1)], _FEED_SCHEMA), root, mode="overwrite")
+    stale = versioned.head(root)
+    assert cdc.merge_upsert(
+        spark, root, spark.createDataFrame([(1, "x", 2)], _FEED_SCHEMA),
+        ["order_id"], "version", "first",
+    )
+    # the second merge read its head before the first one published
+    reads = iter([stale])
+    real_head = versioned.head
+    monkeypatch.setattr(versioned, "head", lambda r: next(reads, None) or real_head(r))
+    with pytest.raises(versioned.VersionConflict):
+        cdc.merge_upsert(
+            spark, root, spark.createDataFrame([(1, "y", 3)], _FEED_SCHEMA),
+            ["order_id"], "version", "second",
+        )
+    version, head = real_head(root)
+    assert version == 2 and head["batch_ids"] == ["first"]
+    assert [tuple(r) for r in versioned.read_version(spark, root).collect()] == [(1, "x", 2)]
+
+
+def test_cdc_first_merge_creates_table(spark, tmp_path):
+    """A table with no commits takes the feed — highest version per key —
+    as its first version, with the batch id recorded."""
+    from wheels_in_motion_analytics_spark.sources import cdc, versioned
+
+    root = str(tmp_path / "t")
+    feed = spark.createDataFrame([(1, "a", 1), (1, "b", 2), (2, "c", 1)], _FEED_SCHEMA)
+    assert cdc.merge_upsert(spark, root, feed, ["order_id"], "version", "b0")
+    version, head = versioned.head(root)
+    assert version == 1 and head["batch_ids"] == ["b0"]
+    assert sorted(map(tuple, versioned.read_version(spark, root).collect())) == [
+        (1, "b", 2), (2, "c", 1)
+    ]
+
+
+def test_cdc_merge_of_empty_feed(spark, tmp_path):
+    """An empty feed commits a version with unchanged content that records
+    the batch id; partition-scoped, it keeps every entry of the parent."""
+    from wheels_in_motion_analytics_spark.sources import cdc, versioned
+
+    root = str(tmp_path / "t")
+    rows = [(1, "a", 1), (2, "b", 1)]
+    versioned.commit(spark.createDataFrame(rows, _FEED_SCHEMA), root, mode="overwrite")
+    empty = spark.createDataFrame([], _FEED_SCHEMA)
+    assert cdc.merge_upsert(spark, root, empty, ["order_id"], "version", "e")
+    assert versioned.head(root)[1]["batch_ids"] == ["e"]
+    assert sorted(map(tuple, versioned.read_version(spark, root).collect())) == rows
+
+    proot = str(tmp_path / "p")
+    _seed_partitioned(spark, proot)
+    feed = cdc._base_state_partitioned(spark, SF_SMALL).limit(0)
+    assert cdc.merge_upsert(
+        spark, proot, feed, ["order_id"], "version", "e", partition_col="order_month"
+    )
+    assert _month_entries(proot, 2) == _month_entries(proot, 1)
+    assert (
+        versioned.read_version(spark, proot, 2).count()
+        == versioned.read_version(spark, proot, 1).count()
     )
 
 

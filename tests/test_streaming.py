@@ -555,6 +555,29 @@ def test_stream_ingest_versioned_commits_match_batch_aggregate(spark):
         assert row["n_versions"] == 3  # one atomic append per micro-batch
 
 
+def test_fanout_state_fold_is_replay_safe(spark, tmp_path):
+    """The fanout's state sink folds each batch id once: replaying a
+    foreachBatch id leaves the running totals unchanged."""
+    from wheels_in_motion_analytics_spark.sources.versioned import read_version
+    from wheels_in_motion_analytics_spark.streaming.sinks import fold_type_totals
+
+    root = str(tmp_path / "state")
+    schema = "event_id BIGINT, event_type STRING, cents BIGINT"
+    b0 = spark.createDataFrame([(1, "click", 150), (2, "view", 25), (3, "click", 5)], schema)
+    b1 = spark.createDataFrame([(4, "view", 10)], schema)
+
+    def totals():
+        return sorted(map(tuple, read_version(spark, root).collect()))
+
+    assert fold_type_totals(root, b0, "0")
+    assert fold_type_totals(root, b1, "1")
+    expected = [("click", 2, 155), ("view", 2, 35)]
+    assert totals() == expected
+    assert not fold_type_totals(root, b0, "0")
+    assert not fold_type_totals(root, b1, "1")
+    assert totals() == expected
+
+
 @pytest.mark.slow
 def test_stream_fanout_sinks_agree_and_match_batch(spark):
     from wheels_in_motion_analytics_spark.streaming.sinks import (

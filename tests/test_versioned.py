@@ -55,6 +55,45 @@ def test_commit_cas_rejects_stale_writer(spark, orders, tmp_path):
     assert current_version(root) == 1
 
 
+def test_publish_race_loser_raises_and_first_entry_stands(tmp_path, monkeypatch):
+    """Two writers racing for one log entry: an existence pre-check cannot
+    see the other writer (forced here by patching ``os.path.exists`` to
+    return False), so the publish itself must refuse to replace the entry."""
+    from wheels_in_motion_analytics_spark.sources.versioned import (
+        branch_base_version,
+        create_branch,
+    )
+
+    root = str(tmp_path / "t")
+    create_branch(root, "fix", at=1)
+    with monkeypatch.context() as m:
+        m.setattr(os.path, "exists", lambda path: False)
+        with pytest.raises(VersionConflict):
+            create_branch(root, "fix", at=2)
+    assert branch_base_version(root, "fix") == 1
+    assert [f for f in os.listdir(os.path.join(root, "branches", "fix", "_log"))] == ["v1.json"]
+
+
+def test_read_version_uses_recorded_schema_and_runs_no_job(spark, orders, tmp_path):
+    """Every manifest records the table schema, so a snapshot read is built
+    without a footer-inference job."""
+    from wheels_in_motion_analytics_spark.sources.versioned import _manifest
+
+    root = str(tmp_path / "t")
+    commit(orders.limit(20), root, mode="overwrite")
+    commit(orders.limit(5), root, mode="append")
+    assert _manifest(root, 2)["schema"] == _manifest(root, 1)["schema"]
+    sc = spark.sparkContext
+    sc.setJobGroup("read_version_build", "snapshot read build")
+    try:
+        df = read_version(spark, root)
+    finally:
+        sc.setJobGroup("", "")
+    assert not sc.statusTracker().getJobIdsForGroup("read_version_build")
+    assert [f.name for f in df.schema.fields] == orders.columns
+    assert df.count() == 25
+
+
 def test_orphan_files_invisible_to_readers(spark, orders, tmp_path):
     """Files in the data dir without a manifest entry (failed commit
     leftovers) must not surface in reads."""
@@ -444,12 +483,10 @@ def test_change_feed_rejects_update_and_branch_base_commits(spark, orders, tmp_p
 
 def test_cow_update_reclaims_stage_dir_on_version_conflict(spark, orders, tmp_path):
     """Losing the CAS race must not orphan staged rewrites in the data dir
-    (vacuum only reclaims manifest-referenced files — r4 advisor)."""
-    import json as _json
-
+    (vacuum only reclaims manifest-referenced files), and the cleanup must
+    leave the winning writer's v2 files in place."""
     from wheels_in_motion_analytics_spark.sources.versioned import (
         _data_dir,
-        _log_dir,
         update_copy_on_write,
     )
 
@@ -457,10 +494,10 @@ def test_cow_update_reclaims_stage_dir_on_version_conflict(spark, orders, tmp_pa
     commit(orders.limit(200), root, mode="overwrite")
 
     def racing_update(df):
-        # a concurrent writer publishes v2 between our base read and our
+        # a concurrent writer commits v2 between our base read and our
         # manifest publish — exactly the CAS race the cleanup must survive
-        with open(os.path.join(_log_dir(root), "v2.json"), "w") as fh:
-            _json.dump({"version": 2, "mode": "append", "files": []}, fh)
+        if current_version(root) == 1:
+            commit(orders.limit(5), root, mode="append")
         return df
 
     with pytest.raises(VersionConflict):
@@ -470,7 +507,9 @@ def test_cow_update_reclaims_stage_dir_on_version_conflict(spark, orders, tmp_pa
             lambda df: df["o_orderkey"] >= 0,
             racing_update,
         )
-    assert not os.path.exists(os.path.join(_data_dir(root), "v2"))
+    staged = [f for _, _, names in os.walk(_data_dir(root)) for f in names]
+    assert not [f for f in staged if f.startswith("rw")]
+    assert read_version(spark, root, 2).count() == 205
 
 
 @pytest.mark.parametrize("chain", [

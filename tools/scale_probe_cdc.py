@@ -1,24 +1,26 @@
-"""Scale probe of the incremental-maintenance (CDC MERGE) family (round 10).
+"""Scale probe of the incremental-maintenance (CDC MERGE) family.
 
-The partition-scoped merge's 100 TB claim (sources/cdc.py:212) is
-"work scales with the dirty set, not the table". The registry verifies its
+The partition-scoped merge's 100 TB claim (sources/cdc.py:merge_upsert
+with ``partition_col``) is "work scales with the dirty set, not the
+table". The registry verifies its
 CORRECTNESS at small sf; this probe verifies the SCALING CLAIM by
 measuring both merge variants over the same dirty-month update batch at
-1x, 10x and 100x the sf0.1 orders table (100x ~ 150M rows — the sf100
-orders cardinality, where a full-table rewrite is minutes and a
-partition-scoped one must not be):
+1x, 10x and 100x the sf0.1 orders table (100x = 15M rows — the sf10
+orders cardinality):
 
-* ``partitioned`` — merge_upsert_partitioned: partition-pruned read of the
-  3 dirty months + dynamic partition overwrite of only those directories.
-* ``full`` — merge_upsert: whole-table read + whole-table rewrite (the
-  reference's WRITE_TRUNCATE shape, sources/cdc.py docstring).
+* ``partitioned`` — merge_upsert with ``partition_col``: read of the 3 dirty
+  months' manifest entries + a commit whose manifest swaps in only their
+  rewritten files.
+* ``full`` — merge_upsert: whole-table read + whole-table rewrite as one
+  new version (the reference's WRITE_TRUNCATE shape, sources/cdc.py
+  docstring).
 
 Claim confirmed iff the partitioned/full wall-time ratio stays pinned near
 the dirty-data fraction (~4%) as the table grows 10x and 100x — i.e. the
 partitioned merge's cost tracks the dirty volume axis, the full merge's
 cost tracks the table volume axis. The probe also re-checks, at every
-scale: untouched partition directories byte-identical after the merge
-(file->size map equality), and the exactly-once ledger no-op re-apply.
+scale: untouched partitions keep their manifest entries and files
+(entry->size map equality), and the exactly-once re-apply is a no-op.
 
 Expansion: o_orderkey re-spaced per replica (key + rep*10_000_000 — clear
 of the +200_000_000 insert key space); o_orderdate untouched, so the
@@ -26,7 +28,8 @@ month-partition layout and the 3-month dirty set are scale-invariant while
 every partition's volume grows with the factor.
 
 Not part of bench.py (runtime is minutes). Results live in PERFORMANCE.md
-("Round-10 scale probe: the CDC merge family"). Run:
+("Round-10 scale probe: the CDC merge family" and "One table-commit
+substrate"). Run:
 
   SPARK_GRAFT_DRIVER_MEM=32g python tools/scale_probe_cdc.py [FACTORS]
 
@@ -47,8 +50,7 @@ import pyspark.sql.functions as F
 
 from tools.harness import release_blocks
 from wheels_in_motion_analytics_spark.session import get_session
-from wheels_in_motion_analytics_spark.sources import cdc
-from wheels_in_motion_analytics_spark.tables import local_frame
+from wheels_in_motion_analytics_spark.sources import cdc, versioned
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 ROOT = "/tmp/sf1probe_cdc"
@@ -89,18 +91,12 @@ def materialize_updates(spark, sf_dir: str) -> str:
     return out
 
 
-def partition_sizes(data_path: str) -> dict[str, dict[str, int]]:
-    """month -> {filename: bytes} for every partition directory."""
+def partition_sizes(tbl: str, version: int) -> dict[str, dict[str, int]]:
+    """month -> {manifest entry: bytes} for every partition of a version."""
     out: dict[str, dict[str, int]] = {}
-    for d in sorted(os.listdir(data_path)):
-        full = os.path.join(data_path, d)
-        if not (os.path.isdir(full) and d.startswith("order_month=")):
-            continue
-        out[d] = {
-            f: os.path.getsize(os.path.join(full, f))
-            for f in sorted(os.listdir(full))
-            if not f.startswith(("_", "."))
-        }
+    for e in versioned._manifest(tbl, version)["files"]:
+        size = os.path.getsize(os.path.join(versioned._data_dir(tbl), e))
+        out.setdefault(cdc._partition_value(e, "order_month"), {})[e] = size
     return out
 
 
@@ -108,42 +104,38 @@ def probe_partitioned(spark, sf_dir: str) -> dict:
     """Seed the month-partitioned table, time the partition-scoped merge."""
     tbl = os.path.join(ROOT, "work_part")
     shutil.rmtree(tbl, ignore_errors=True)
-    data_path = os.path.join(tbl, "data")
 
     t0 = time.perf_counter()
-    base = cdc._base_state_partitioned(spark, sf_dir).localCheckpoint()
-    base.repartition(F.col("order_month")).write.mode("overwrite").partitionBy(
-        "order_month"
-    ).parquet(data_path)
-    seed_s = time.perf_counter() - t0
-    local_frame(spark, [], cdc._LEDGER_SCHEMA).write.mode("overwrite").parquet(
-        cdc._ledger_path(tbl)
+    versioned.commit(
+        cdc._base_state_partitioned(spark, sf_dir).repartition(F.col("order_month")),
+        tbl,
+        mode="overwrite",
+        partition_col="order_month",
     )
+    seed_s = time.perf_counter() - t0
 
     release_blocks(spark)
-    before = partition_sizes(data_path)
     updates = spark.read.parquet(materialize_updates(spark, sf_dir))
     t0 = time.perf_counter()
-    applied = cdc.merge_upsert_partitioned(
-        spark, tbl, updates, ["order_id"], "version", "order_month", "b1"
+    applied = cdc.merge_upsert(
+        spark, tbl, updates, ["order_id"], "version", "b1", partition_col="order_month"
     )
     merge_s = time.perf_counter() - t0
     assert applied
 
     t0 = time.perf_counter()
-    reapplied = cdc.merge_upsert_partitioned(
-        spark, tbl, updates, ["order_id"], "version", "order_month", "b1"
+    reapplied = cdc.merge_upsert(
+        spark, tbl, updates, ["order_id"], "version", "b1", partition_col="order_month"
     )
     noop_s = time.perf_counter() - t0
-    assert not reapplied, "exactly-once ledger violated"
+    assert not reapplied, "exactly-once batch guard violated"
 
-    after = partition_sizes(data_path)
-    dirty = {f"order_month={m}" for m in cdc.DIRTY_MONTHS}
+    before, after = partition_sizes(tbl, 1), partition_sizes(tbl, 2)
     untouched_ok = all(
-        before[m] == after[m] for m in before if m not in dirty
+        before[m] == after[m] for m in before if m not in cdc.DIRTY_MONTHS
     )
     rewritten = sorted(m for m in after if before.get(m) != after.get(m))
-    rows = spark.read.parquet(data_path).count()
+    rows = versioned.read_version(spark, tbl).count()
     shutil.rmtree(tbl, ignore_errors=True)
     return {
         "seed_s": round(seed_s, 2),
@@ -151,8 +143,8 @@ def probe_partitioned(spark, sf_dir: str) -> dict:
         "noop_s": round(noop_s, 3),
         "rows_after": rows,
         "partitions": len(before),
-        "rewritten_dirs": rewritten,
-        "untouched_byte_identical": untouched_ok,
+        "rewritten_partitions": rewritten,
+        "untouched_entries_identical": untouched_ok,
     }
 
 
@@ -161,25 +153,20 @@ def probe_full(spark, sf_dir: str) -> dict:
     read + rewrite — the WRITE_TRUNCATE shape the reference uses)."""
     tbl = os.path.join(ROOT, "work_full")
     shutil.rmtree(tbl, ignore_errors=True)
-    data_path = os.path.join(tbl, "data")
 
     t0 = time.perf_counter()
-    base = cdc._base_state_partitioned(spark, sf_dir).localCheckpoint()
-    base.repartition(32).write.mode("overwrite").parquet(data_path)
-    seed_s = time.perf_counter() - t0
-    local_frame(spark, [], cdc._LEDGER_SCHEMA).write.mode("overwrite").parquet(
-        cdc._ledger_path(tbl)
+    versioned.commit(
+        cdc._base_state_partitioned(spark, sf_dir).repartition(32), tbl, mode="overwrite"
     )
+    seed_s = time.perf_counter() - t0
 
     release_blocks(spark)
     updates = spark.read.parquet(materialize_updates(spark, sf_dir))
     t0 = time.perf_counter()
-    applied = cdc.merge_upsert(
-        spark, tbl, updates, ["order_id"], "version", "b1"
-    )
+    applied = cdc.merge_upsert(spark, tbl, updates, ["order_id"], "version", "b1")
     merge_s = time.perf_counter() - t0
     assert applied
-    rows = spark.read.parquet(data_path).count()
+    rows = versioned.read_version(spark, tbl).count()
     shutil.rmtree(tbl, ignore_errors=True)
     return {"seed_s": round(seed_s, 2), "merge_s": round(merge_s, 2), "rows_after": rows}
 

@@ -1,70 +1,50 @@
-"""Storage-level incremental MERGE (CDC upsert into a parquet table).
+"""Storage-level incremental MERGE (CDC upsert into a versioned table).
 
 The reference's incremental story is idempotent-by-truncation: every load is
 a ``WRITE_TRUNCATE`` of the whole BigQuery table (proc_2_GCS_to_BQ_dag.py:
 89-91). That is correct but rewrites everything; the engine counterpart here
-is a keyed MERGE into a parquet-backed table with per-batch exactly-once:
+is a keyed MERGE that lands as ONE commit on the versioned table log
+(sources/versioned.py):
 
-* ``merge_upsert`` = read current state ∪ update batch → keep the highest
-  ``version`` per key (deterministic row_number, ties broken toward the
-  update) → ``localCheckpoint`` (the self-overwrite guard,
-  plans/reference_pipeline.py) → overwrite the table path.
-* A batch ledger (``_applied_batches``) records applied batch ids; re-running
-  a batch is a no-op, so a scheduler retry cannot double-apply (the
-  exactly-once property the reference gets from truncation, without the
-  full rewrite).
-
-At 100 TB the overwrite would be scoped per partition (dynamic partition
-overwrite) rather than whole-table; the merge plan itself — one union, one
-per-key window — already shuffles only on the merge key.
-
-No Delta/Iceberg in the environment, so the transaction boundary is the
-parquet directory swap; the ledger supplies the idempotency those formats
-get from their commit log.
+* ``merge_upsert`` = read the head manifest (driver-side JSON) → read the
+  current files ∪ the update batch → keep the highest ``version`` per key
+  (deterministic row_number, ties broken toward the update) → commit a new
+  version. A new version never overwrites its input, so no self-overwrite
+  guard (``localCheckpoint``) is needed.
+* Exactly-once: the batch id is recorded in the same manifest publish as the
+  merged data (Delta's ``txn`` action), and every later commit carries it
+  forward. Re-running a batch is a no-op, so a scheduler retry cannot
+  double-apply, and no crash can leave the data applied without its id.
+* With ``partition_col`` the merge is partition-scoped — the 100 TB shape:
+  only the dirty partitions' files are read and rewritten; the new manifest
+  keeps every clean partition's entries (Delta's remove+add), so the work
+  scales with the dirty set, not the table.
 """
 
 from __future__ import annotations
 
 import os
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession, Window
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 
 from wheels_in_motion_analytics_spark.registry import register
-from wheels_in_motion_analytics_spark.tables import local_frame, table
-
-_LEDGER_SCHEMA = T.StructType([T.StructField("batch_id", T.StringType())])
-
-
-def _ledger_path(table_path: str) -> str:
-    return os.path.join(table_path, "_applied_batches")
+from wheels_in_motion_analytics_spark.sources import versioned
+from wheels_in_motion_analytics_spark.tables import table
 
 
-def applied_batches(spark: SparkSession, table_path: str) -> set[str]:
-    from wheels_in_motion_analytics_spark.sources.readers import read_parquet_or_empty
-
-    rows = read_parquet_or_empty(spark, _ledger_path(table_path), _LEDGER_SCHEMA).collect()
-    return {r.batch_id for r in rows}
-
-
-def _assert_feed_matches_stored(updates: DataFrame, data_path: str) -> None:
-    """Guard for the explicit-schema merge reads (r11 ADVICE fix): reading
-    the stored table with ``updates.schema`` silently NULLs any stored
-    column absent from the feed — and the merge would then rewrite that
-    column away. Compare field names against one stored footer DRIVER-SIDE
-    (a ~ms pyarrow probe, not a Spark inference job) and fail loudly on
-    mismatch instead."""
+def _assert_feed_matches_stored(updates: DataFrame, probe_file: str) -> None:
+    """Guard for the explicit-schema merge reads: reading the stored table
+    with ``updates.schema`` silently NULLs any stored column absent from
+    the feed — and the merge would then rewrite that column away. Compare
+    field names against one stored footer DRIVER-SIDE (a ~ms pyarrow
+    probe, not a Spark inference job) and fail loudly on mismatch."""
     try:
-        import glob
-
         import pyarrow.parquet as pq
 
-        files = sorted(glob.glob(os.path.join(data_path, "**", "*.parquet"),
-                                 recursive=True))
-        if not files:
-            return
-        stored = set(pq.ParquetFile(files[0]).schema_arrow.names)
+        stored = set(pq.ParquetFile(probe_file).schema_arrow.names)
     except Exception:
         return  # probe is best-effort; absence of pyarrow must not break merges
     # partition columns live in directory names, not footers — they are
@@ -78,47 +58,83 @@ def _assert_feed_matches_stored(updates: DataFrame, data_path: str) -> None:
         )
 
 
+def _partition_value(entry: str, col: str) -> str:
+    """The ``<col>=<val>`` directory value of a manifest entry, unescaped."""
+    prefix = f"{col}="
+    return unquote(next(p for p in entry.split(os.sep) if p.startswith(prefix))[len(prefix):])
+
+
 def merge_upsert(
     spark: SparkSession,
-    table_path: str,
+    root: str,
     updates: DataFrame,
     key_cols: list[str],
     version_col: str,
     batch_id: str,
+    partition_col: str | None = None,
 ) -> bool:
-    """MERGE ``updates`` into the parquet table at ``table_path``.
+    """MERGE ``updates`` into the versioned table at ``root`` as one commit.
 
     Keeps the highest ``version_col`` per key; on version ties the update
     row wins (MERGE semantics: WHEN MATCHED THEN UPDATE). Returns False
-    (no-op) if ``batch_id`` was already applied — the exactly-once guard.
+    (no-op) if ``batch_id`` is already recorded in the head manifest — the
+    exactly-once guard. A table with no commits takes the feed (highest
+    version per key) as its first version. The commit expects the head read
+    here, so a concurrent merge from the same base raises VersionConflict.
+
+    With ``partition_col`` (a string or integer column) only the head's
+    files in partitions present in ``updates`` are read; the new version
+    holds their merged rewrite plus every other partition's entries,
+    untouched. A key's partition value must not change: the old row of a
+    key that moves partitions stays in its clean partition.
     """
-    if batch_id in applied_batches(spark, table_path):
+    base, head = versioned.head(root)
+    if batch_id in head.get("batch_ids", ()):
         return False
-    # the table's schema is the update feed's schema by construction (the
-    # seed and every merge write the same columns) — supplying it skips the
-    # per-call footer-inference job (r10 loader lesson, guide §1.2); the
-    # by-construction claim is enforced, not assumed:
-    _assert_feed_matches_stored(updates, os.path.join(table_path, "data"))
-    current = (
-        spark.read.schema(updates.schema)
-        .parquet(os.path.join(table_path, "data"))
-        .withColumn("__src", F.lit(0))
-    )
-    tagged = updates.withColumn("__src", F.lit(1))
+    if head.get("deletes"):
+        raise ValueError("merge over a deletion-vector chain: overwrite first")
+    if head.get("files"):
+        _assert_feed_matches_stored(
+            updates, os.path.join(versioned._data_dir(root), head["files"][0])
+        )
+    current, keep = None, None
+    if base:
+        files = head["files"]
+        if partition_col is not None:
+            if not isinstance(updates.schema[partition_col].dataType, (T.StringType, T.IntegralType)):
+                raise ValueError(f"partition column {partition_col!r} must be a string or integer")
+            # The feed is read twice (the dirty-partition collect and the
+            # merge union): materialize it once, or each read re-evaluates
+            # its whole lineage — a full re-scan when the feed is derived
+            # from a large table (measured 2x the feed cost at the 100x
+            # scale probe).
+            updates = updates.localCheckpoint()
+            # NULL and '' both land in Spark's default partition directory
+            dirty = {
+                "__HIVE_DEFAULT_PARTITION__" if v in (None, "") else str(v)
+                for (v,) in updates.select(partition_col).distinct().collect()
+            }
+            keep = [e for e in files if _partition_value(e, partition_col) not in dirty]
+            files = [e for e in files if _partition_value(e, partition_col) in dirty]
+        # the feed's schema is the table's by construction (the guard above
+        # enforces it) — supplying it skips footer inference
+        current = versioned.read_entries(spark, root, head, files, updates.schema)
+    rows = updates.withColumn("__src", F.lit(1))
+    if current is not None:
+        rows = current.withColumn("__src", F.lit(0)).unionByName(rows)
     w = Window.partitionBy(*key_cols).orderBy(
         F.col(version_col).desc(), F.col("__src").desc()
     )
-    merged = (
-        current.unionByName(tagged)
-        .withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn", "__src")
-        # self-overwrite guard: materialize BEFORE truncating the input path
-        .localCheckpoint()
+    merged = rows.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") == 1).drop(
+        "__rn", "__src"
     )
-    merged.write.mode("overwrite").parquet(os.path.join(table_path, "data"))
-    local_frame(spark, [(batch_id,)], _LEDGER_SCHEMA).write.mode("append").parquet(
-        _ledger_path(table_path)
+    if partition_col is not None:
+        # shuffle by the partition key first: one writer per partition
+        # directory instead of every task spraying a file into every dir
+        merged = merged.repartition(F.col(partition_col))
+    versioned.commit(
+        merged, root, mode="merge", expected_version=base, batch_id=batch_id,
+        partition_col=partition_col, keep=keep,
     )
     return True
 
@@ -175,33 +191,25 @@ def _update_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 def run_cdc_pipeline(spark: SparkSession, sf_dir: str, table_path: str) -> DataFrame:
     """Seed the table, apply the update batch TWICE under one batch id (the
     second apply must be the exactly-once no-op), return the final state."""
-    base = _base_state(spark, sf_dir).localCheckpoint()
-    base.write.mode("overwrite").parquet(os.path.join(table_path, "data"))
-    ledger = _ledger_path(table_path)
-    local_frame(spark, [], _LEDGER_SCHEMA).write.mode("overwrite").parquet(ledger)
-
+    versioned.commit(_base_state(spark, sf_dir), table_path, mode="overwrite")
     applied_first = merge_upsert(
         spark, table_path, _update_batch(spark, sf_dir), ["order_id"], "version", "batch-1"
     )
     applied_again = merge_upsert(
         spark, table_path, _update_batch(spark, sf_dir), ["order_id"], "version", "batch-1"
     )
-    assert applied_first and not applied_again, "exactly-once ledger violated"
-    return (
-        spark.read.schema(base.schema)
-        .parquet(os.path.join(table_path, "data"))
-        .select(*_BASE_COLS)
-    )
+    assert applied_first and not applied_again, "exactly-once batch guard violated"
+    return versioned.read_version(spark, table_path).select(*_BASE_COLS)
 
 
 @register(
     "cdc_merge_orders_state",
     category="sources",
-    doc="Storage-level CDC MERGE: seed a parquet table from orders, apply a "
-    "derived update+insert batch through the keyed exactly-once merge "
-    "(applied twice — the rerun is a ledger no-op), read back the final "
-    "state. The oracle rebuilds the same final state relationally from "
-    "orders.",
+    doc="Storage-level CDC MERGE: seed a versioned table from orders, apply "
+    "a derived update+insert batch through the keyed exactly-once merge "
+    "commit (applied twice — the rerun is a no-op: its batch id is in the "
+    "head manifest), read back the final state. The oracle rebuilds the "
+    "same final state relationally from orders.",
     oracle="""
 WITH base AS (
   SELECT o_orderkey AS order_id, o_orderstatus AS status,
@@ -244,79 +252,10 @@ def cdc_merge_orders_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Dynamic-partition-overwrite variant: merge touches ONLY dirty partitions
+# Partition-scoped variant: the merge rewrites ONLY dirty partitions
 # ---------------------------------------------------------------------------
 
 DIRTY_MONTHS = ["1997-03", "1997-04", "1997-05"]
-
-
-def merge_upsert_partitioned(
-    spark: SparkSession,
-    table_path: str,
-    updates: DataFrame,
-    key_cols: list[str],
-    version_col: str,
-    partition_col: str,
-    batch_id: str,
-) -> bool:
-    """Partition-scoped MERGE: the 100 TB variant of :func:`merge_upsert`.
-
-    Reads ONLY the partitions present in ``updates`` (partition-pruned
-    scan), merges, and rewrites ONLY those partitions via dynamic partition
-    overwrite — untouched partition directories keep their files byte-for-
-    byte (asserted in tests/test_sinks.py). Work scales with the dirty set,
-    not the table.
-    """
-    if batch_id in applied_batches(spark, table_path):
-        return False
-    data_path = os.path.join(table_path, "data")
-    # Materialize the update feed ONCE: it is referenced twice below (the
-    # dirty-partition collect and the merge union), and without this each
-    # reference re-evaluates the feed's whole lineage — harmless for a real
-    # CDC feed read off storage, but a full re-scan when the feed is
-    # derived from a large table (measured 2x the feed cost at the r10
-    # 100x probe). Memory is bounded by the dirty set, the same contract
-    # as the merged checkpoint below.
-    updates = updates.localCheckpoint()
-    dirty = [r[0] for r in updates.select(partition_col).distinct().collect()]
-    # enforce the feed-carries-every-stored-column contract (the partition
-    # column is directory-encoded, so the footer probe ignores it)
-    _assert_feed_matches_stored(updates, data_path)
-    current = (
-        # feed schema == table schema (partition column included; its type
-        # comes from the declared schema instead of directory-name
-        # inference) — no footer-inference job per merge
-        spark.read.schema(updates.schema)
-        .parquet(data_path)
-        # partition filter -> PartitionFilters in the scan: prunes to dirty dirs
-        .where(F.col(partition_col).isin(dirty))
-        .withColumn("__src", F.lit(0))
-    )
-    tagged = updates.withColumn("__src", F.lit(1))
-    w = Window.partitionBy(*key_cols).orderBy(
-        F.col(version_col).desc(), F.col("__src").desc()
-    )
-    merged = (
-        current.unionByName(tagged)
-        .withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn", "__src")
-        .localCheckpoint()  # self-overwrite guard before truncating dirty dirs
-    )
-    (
-        # shuffle by the partition key first: one writer per partition
-        # directory instead of every task spraying a file into every dir
-        # (the small-file explosion that kills partitioned lakes at scale)
-        merged.repartition(F.col(partition_col))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
-        .parquet(data_path)
-    )
-    local_frame(spark, [(batch_id,)], _LEDGER_SCHEMA).write.mode("append").parquet(
-        _ledger_path(table_path)
-    )
-    return True
 
 
 def _base_state_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -361,39 +300,32 @@ def _update_batch_months(spark: SparkSession, sf_dir: str) -> DataFrame:
 def run_partitioned_cdc(spark: SparkSession, sf_dir: str, table_path: str) -> DataFrame:
     """Seed the month-partitioned table, apply the dirty-month batch twice
     (second apply = exactly-once no-op), return the full final state."""
-    data_path = os.path.join(table_path, "data")
-    base = _base_state_partitioned(spark, sf_dir).localCheckpoint()
-    base.repartition(F.col("order_month")).write.mode("overwrite").partitionBy(
-        "order_month"
-    ).parquet(data_path)
-    local_frame(spark, [], _LEDGER_SCHEMA).write.mode("overwrite").parquet(
-        _ledger_path(table_path)
+    versioned.commit(
+        _base_state_partitioned(spark, sf_dir).repartition(F.col("order_month")),
+        table_path,
+        mode="overwrite",
+        partition_col="order_month",
     )
-    first = merge_upsert_partitioned(
-        spark, table_path, _update_batch_months(spark, sf_dir),
-        ["order_id"], "version", "order_month", "batch-1",
+    first, again = (
+        merge_upsert(
+            spark, table_path, _update_batch_months(spark, sf_dir),
+            ["order_id"], "version", "batch-1", partition_col="order_month",
+        )
+        for _ in range(2)
     )
-    again = merge_upsert_partitioned(
-        spark, table_path, _update_batch_months(spark, sf_dir),
-        ["order_id"], "version", "order_month", "batch-1",
-    )
-    assert first and not again, "exactly-once ledger violated"
-    return (
-        spark.read.schema(base.schema)
-        .parquet(data_path)
-        .select(*_BASE_COLS, "order_month")
-    )
+    assert first and not again, "exactly-once batch guard violated"
+    return versioned.read_version(spark, table_path).select(*_BASE_COLS, "order_month")
 
 
 @register(
     "cdc_merge_partition_overwrite",
     category="sources",
-    doc="Partition-scoped CDC MERGE (dynamic partition overwrite): updates "
-    "land in 3 dirty months of a month-partitioned orders table; the merge "
-    "reads only those partitions (PartitionFilters) and rewrites only their "
-    "directories — untouched months keep their files byte-for-byte. Work "
-    "scales with the dirty set, not the table; this is the whole-table "
-    "cdc_merge_orders_state made 100 TB-shaped.",
+    doc="Partition-scoped CDC MERGE (remove+add commit): updates land in 3 "
+    "dirty months of a month-partitioned versioned orders table; the merge "
+    "reads only those months' manifest entries and commits a version that "
+    "swaps in their rewritten files — untouched months keep their files "
+    "and entries. Work scales with the dirty set, not the table; this is "
+    "the whole-table cdc_merge_orders_state made 100 TB-shaped.",
     oracle="""
 WITH base AS (
   SELECT o_orderkey AS order_id, o_orderstatus AS status,

@@ -3,23 +3,32 @@ transaction-log-lite the environment's missing Delta/Iceberg would provide.
 
 Layout::
 
-    <root>/data/v{N}-*.parquet      immutable data files
-    <root>/_log/v{N}.json           commit manifest: files + op + counts
+    <root>/data/v{N}/<attempt>/*.parquet           immutable data files
+    <root>/data/v{N}/<attempt>/<col>=<val>/*.parquet   (partitioned tables)
+    <root>/_log/v{N}.json                          commit manifest
 
-A *commit* writes new data files, then publishes the manifest via an
-atomic ``os.rename`` — readers either see the old version or the new one,
-never a half-written directory listing (the same single-writer atomic-
-rename contract Delta's _delta_log relies on). Old files are never mutated
-or deleted, so every historical version stays readable (time travel) and
-in-flight readers of version N are isolated from a concurrent commit of
-N+1. Optimistic concurrency: committing version N fails if ``v{N}.json``
-already exists (compare-and-swap on the log entry).
+A *commit* stages new data files, then publishes the manifest (``_publish``)
+with an atomic no-replace link — readers either see the old version or the
+new one, never a half-written directory listing, and of two writers racing
+for version N exactly one wins (compare-and-swap on the log entry; the
+loser gets ``VersionConflict``). Each commit attempt stages into its own
+``<attempt>`` directory, so a retry after a crash between staging and
+publish never collides with the crashed attempt's orphans. Old files are
+never mutated or deleted, so every historical version stays readable (time
+travel) and in-flight readers of version N are isolated from a concurrent
+commit of N+1.
 
-``append`` commits reference the parent's files plus the new ones;
-``overwrite`` commits reference only the new ones. Readers NEVER list the
-data directory — the manifest is the source of truth, so stale files from
-failed commits are invisible (exactly the property directory-listing
-parquet lacks).
+A manifest lists the version's files, the table schema (reads supply it,
+so no footer-inference job runs), the partition column if any, and the ids
+of every batch applied to the table so far — carried forward by every
+commit, so a batch id is published in the same step as the data it
+applied (Delta's ``txn`` action). ``append`` commits reference the parent's
+files plus the new ones; ``overwrite`` commits reference only the new ones;
+``merge`` commits keep a chosen subset of the parent's files (the clean
+partitions of a partition-scoped rewrite — Delta's remove+add). Readers
+NEVER list the data directory — the manifest is the source of truth, so
+stale files from failed commits are invisible (exactly the property
+directory-listing parquet lacks).
 
 Reference analogue: the serving loads are WRITE_TRUNCATE per run
 (proc_2_GCS_to_BQ_dag.py:89-91) — correct but destroys history; this keeps
@@ -32,9 +41,11 @@ import json
 import os
 import shutil
 import tempfile
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
+import pyspark.sql.types as T
 
 from wheels_in_motion_analytics_spark.registry import register
 from wheels_in_motion_analytics_spark.tables import table
@@ -70,38 +81,104 @@ def _manifest(root: str, version: int) -> dict:
         return json.load(fh)
 
 
+def head(root: str) -> tuple[int, dict]:
+    """The latest version and its manifest (``(0, {})`` for a table with
+    no commits) — a driver-side JSON read, no Spark job."""
+    v = current_version(root)
+    return v, (_manifest(root, v) if v else {})
+
+
+def _stage(df: DataFrame, root: str, top: str, partition_col: str | None = None) -> list[str]:
+    """Write ``df`` under a fresh ``data/<top>/<attempt>/`` directory and
+    return the written files as manifest entries (relative to ``data/``)."""
+    stage = os.path.join(_data_dir(root), top, uuid.uuid4().hex[:12])
+    writer = df.write.mode("errorifexists")
+    if partition_col is not None:
+        writer = writer.partitionBy(partition_col)
+    writer.parquet(stage)
+    return sorted(
+        os.path.relpath(os.path.join(d, f), _data_dir(root))
+        for d, _, names in os.walk(stage)
+        for f in names
+        if f.endswith(".parquet")
+    )
+
+
+def _union_schema(prev: dict, schema: T.StructType) -> T.StructType:
+    """The parent's recorded schema plus the columns ``schema`` adds."""
+    if "schema" not in prev:
+        return schema
+    old = T.StructType.fromJson(prev["schema"])
+    return T.StructType(old.fields + [f for f in schema.fields if f.name not in old.names])
+
+
+def _publish(
+    root: str,
+    manifest: dict,
+    prev: dict,
+    schema: T.StructType | None = None,
+    batch_id: str | None = None,
+) -> int:
+    """Publish ``manifest`` as log entry ``v{manifest['version']}`` — the
+    one way a version enters the log. Records ``schema`` (default: the
+    parent's) and the parent's batch ids plus ``batch_id``. The entry is
+    written to a temp file and hard-linked into place: the link fails if
+    the entry exists (a rename would silently replace the first writer's
+    entry), so the check and the publish are one atomic step."""
+    if schema is not None:
+        manifest["schema"] = schema.jsonValue()
+    elif "schema" in prev:
+        manifest["schema"] = prev["schema"]
+    batch_ids = prev.get("batch_ids", []) + ([batch_id] if batch_id is not None else [])
+    if batch_ids:
+        manifest["batch_ids"] = batch_ids
+    version = manifest["version"]
+    final = os.path.join(_log_dir(root), f"v{version}.json")
+    fd, tmp = tempfile.mkstemp(dir=_log_dir(root), suffix=".tmp")
+    try:
+        with os.fdopen(fd, "w") as fh:
+            json.dump(manifest, fh)
+        os.link(tmp, final)
+    except FileExistsError:
+        raise VersionConflict(f"v{version} of {root} already committed") from None
+    finally:
+        os.unlink(tmp)
+    return version
+
+
 def commit(
     df: DataFrame,
     root: str,
     mode: str = "append",
     expected_version: int | None = None,
+    batch_id: str | None = None,
+    partition_col: str | None = None,
+    keep: list[str] | None = None,
 ) -> int:
     """Write ``df`` as a new table version; returns the committed version.
 
-    ``expected_version`` (optimistic CAS): fail with VersionConflict if the
-    table has moved past it. Data files are written BEFORE the manifest
-    rename, so a crash mid-commit leaves only invisible orphans.
+    ``mode``: ``append`` carries the parent's files forward (and inherits
+    its partition column), ``overwrite`` carries none, ``merge`` carries
+    the parent entries listed in ``keep``. ``expected_version``
+    (optimistic CAS): fail with VersionConflict if the table has moved
+    past it. ``batch_id`` is recorded in the published manifest.
+    ``partition_col`` writes hive-style ``<col>=<val>/`` directories. Data
+    files are written BEFORE the manifest publish, so a crash mid-commit
+    leaves only invisible orphans.
     """
     os.makedirs(_log_dir(root), exist_ok=True)
-    os.makedirs(_data_dir(root), exist_ok=True)
-    base = current_version(root)
+    base, prev = head(root)
     if expected_version is not None and base != expected_version:
         raise VersionConflict(f"expected v{expected_version}, table is at v{base}")
     version = base + 1
-
-    # Stage data files into a version-scoped subdirectory (names never
-    # collide across versions, files stay immutable).
-    stage = os.path.join(_data_dir(root), f"v{version}")
-    df.write.mode("errorifexists").parquet(stage)
-    new_files = sorted(
-        os.path.join(f"v{version}", f)
-        for f in os.listdir(stage)
-        if f.endswith(".parquet")
-    )
+    schema = df.schema
+    if mode == "append":
+        partition_col = partition_col or prev.get("partition_col")
+        schema = _union_schema(prev, schema)
+    new_files = _stage(df, root, f"v{version}", partition_col)
     manifest = {"version": version, "mode": mode}
-    if mode == "append" and base > 0:
-        prev = _manifest(root, base)
-        manifest["files"] = prev["files"] + new_files
+    if mode == "append":
+        manifest["files"] = prev.get("files", []) + new_files
         # An append must carry the accumulated DV chain forward or the
         # deleted rows resurrect in every later snapshot (caught by the
         # change-feed replay invariant in tests/test_versioned.py). The
@@ -113,16 +190,54 @@ def commit(
             manifest["deletes"] = prev["deletes"]
             manifest["delete_key"] = prev["delete_key"]
     else:
-        manifest["files"] = new_files
-    final = os.path.join(_log_dir(root), f"v{version}.json")
-    fd, tmp = tempfile.mkstemp(dir=_log_dir(root), suffix=".tmp")
-    with os.fdopen(fd, "w") as fh:
-        json.dump(manifest, fh)
-    if os.path.exists(final):  # CAS on the log entry
-        os.unlink(tmp)
-        raise VersionConflict(f"v{version} already committed")
-    os.rename(tmp, final)  # atomic publish
-    return version
+        manifest["files"] = (keep or []) + new_files
+    if partition_col is not None:
+        manifest["partition_col"] = partition_col
+    return _publish(root, manifest, prev, schema, batch_id)
+
+
+def read_entries(
+    spark: SparkSession,
+    root: str,
+    manifest: dict,
+    entries: list[str],
+    schema: T.StructType | None = None,
+    merge_schema: bool = False,
+) -> DataFrame:
+    """Scan ``entries`` (files of the version described by ``manifest``).
+
+    The schema defaults to the manifest's recorded one — no footer-
+    inference job; ``merge_schema=True`` infers the union of the files'
+    schemas instead. A partitioned table is read one scan per staging
+    directory, with that directory as ``basePath`` (a plain read of files
+    from two versions NULLs the partition column; one ``basePath`` over
+    both is a conflicting directory structure)."""
+    reader = spark.read
+    if merge_schema:
+        reader = reader.option("mergeSchema", "true")
+    elif schema is None and "schema" in manifest:
+        schema = T.StructType.fromJson(manifest["schema"])
+    if schema is not None:
+        reader = reader.schema(schema)
+    data = _data_dir(root)
+    col = manifest.get("partition_col")
+    if col is None:
+        return reader.parquet(*[os.path.join(data, e) for e in entries])
+    stages: dict[str, list[str]] = {}
+    for e in entries:
+        stages.setdefault(e.split(f"{os.sep}{col}=", 1)[0], []).append(e)
+    scans = [
+        reader.option("basePath", os.path.join(data, stage)).parquet(
+            *[os.path.join(data, e) for e in files]
+        )
+        for stage, files in stages.items()
+    ]
+    if not scans:
+        return reader.parquet()
+    out = scans[0]
+    for scan in scans[1:]:
+        out = out.unionByName(scan, allowMissingColumns=merge_schema)
+    return out
 
 
 def read_version(
@@ -141,11 +256,7 @@ def read_version(
     m = _manifest(root, v)
     if m.get("deletes"):
         return read_version_mor(spark, root, version=v, merge_schema=merge_schema)
-    files = [os.path.join(_data_dir(root), f) for f in m["files"]]
-    reader = spark.read
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
-    return reader.parquet(*files)
+    return read_entries(spark, root, m, m["files"], merge_schema=merge_schema)
 
 
 @register(
@@ -154,7 +265,7 @@ def read_version(
     doc="Snapshot-isolated versioned table: three commits (initial load, "
     "append, overwrite-correction) then a TIME-TRAVEL read of v2 — the "
     "pre-correction state — aggregated per status. Readers resolve files "
-    "from the atomic-rename commit log, never directory listings, so "
+    "from the atomically published commit log, never directory listings, so "
     "v2 stays byte-stable after v3 overwrites. Oracle reproduces v2's "
     "logical content (orders before the 1999 cutoff) relationally.",
     oracle="""
@@ -310,7 +421,7 @@ def _order_agg_batch(orders: DataFrame) -> DataFrame:
     "are merged as PARTIAL aggregates (union + re-sum of count/decimal-sum "
     "monoids) — each refresh touches only the batch plus the tiny state, "
     "never the full history. Every state version commits to the versioned "
-    "table (atomic rename, time-travelable). Oracle: the equivalent "
+    "table (atomic publish, time-travelable). Oracle: the equivalent "
     "one-shot aggregate over the full input — incremental == full is the "
     "correctness property of the pattern.",
     oracle="""
@@ -469,14 +580,7 @@ def create_branch(root: str, name: str, at: int | None = None) -> str:
     os.makedirs(_log_dir(broot), exist_ok=True)
     os.makedirs(_data_dir(broot), exist_ok=True)
     manifest = {"version": 1, "mode": "branch-base", "files": [], "base_version": base_version}
-    final = os.path.join(_log_dir(broot), "v1.json")
-    fd, tmp = tempfile.mkstemp(dir=_log_dir(broot), suffix=".tmp")
-    with os.fdopen(fd, "w") as fh:
-        json.dump(manifest, fh)
-    if os.path.exists(final):
-        os.unlink(tmp)
-        raise VersionConflict(f"branch {name} already exists")
-    os.rename(tmp, final)
+    _publish(broot, manifest, {})
     return broot
 
 
@@ -643,18 +747,11 @@ def commit_delete(df_keys: DataFrame, root: str, key: str) -> int:
     immutable data files), and the manifest carries the DV chain. Readers
     anti-join the accumulated keys — merge-on-read, the cheap-delete half
     of the CoW/MoR trade-off (OPTIMIZE/compact() is the rewrite half)."""
-    base = current_version(root)
+    base, prev = head(root)
     if base == 0:
         raise ValueError("cannot delete from an empty table")
     version = base + 1
-    stage = os.path.join(_data_dir(root), f"v{version}-deletes")
-    df_keys.write.mode("errorifexists").parquet(stage)
-    new_dv = sorted(
-        os.path.join(f"v{version}-deletes", f)
-        for f in os.listdir(stage)
-        if f.endswith(".parquet")
-    )
-    prev = _manifest(root, base)
+    new_dv = _stage(df_keys, root, f"v{version}-deletes")
     manifest = {
         "version": version,
         "mode": "delete",
@@ -662,15 +759,9 @@ def commit_delete(df_keys: DataFrame, root: str, key: str) -> int:
         "deletes": prev.get("deletes", []) + new_dv,
         "delete_key": key,
     }
-    final = os.path.join(_log_dir(root), f"v{version}.json")
-    fd, tmp = tempfile.mkstemp(dir=_log_dir(root), suffix=".tmp")
-    with os.fdopen(fd, "w") as fh:
-        json.dump(manifest, fh)
-    if os.path.exists(final):
-        os.unlink(tmp)
-        raise VersionConflict(f"v{version} already committed")
-    os.rename(tmp, final)
-    return version
+    if "partition_col" in prev:
+        manifest["partition_col"] = prev["partition_col"]
+    return _publish(root, manifest, prev)
 
 
 def _entry_version(rel: str) -> int:
@@ -695,14 +786,9 @@ def read_version_mor(
     shuffle shape per group as the global form."""
     v = current_version(root) if version is None else version
     m = _manifest(root, v)
-    reader = spark.read
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
     dvs = m.get("deletes", [])
     if not dvs:
-        return reader.parquet(
-            *[os.path.join(_data_dir(root), f) for f in m["files"]]
-        )
+        return read_entries(spark, root, m, m["files"], merge_schema=merge_schema)
     groups: dict[tuple, list] = {}
     for f in m["files"]:
         fv = _entry_version(f)
@@ -710,9 +796,7 @@ def read_version_mor(
         groups.setdefault(covering, []).append(f)
     pieces = []
     for covering, files in groups.items():
-        part = reader.parquet(
-            *[os.path.join(_data_dir(root), f) for f in files]
-        )
+        part = read_entries(spark, root, m, files, merge_schema=merge_schema)
         if covering:
             keys = spark.read.parquet(
                 *[os.path.join(_data_dir(root), d) for d in covering]
@@ -1093,7 +1177,7 @@ def update_copy_on_write(spark: SparkSession, root: str, predicate, apply_update
     untouched (byte-identical, same manifest entry), files WITH matches
     are rewritten with ``apply_update`` applied to every row. The new
     manifest references kept + rewritten files and publishes through the
-    same CAS atomic rename as ``commit``. At real scale the probe is a
+    same atomic no-replace ``_publish`` as ``commit``. At real scale the probe is a
     min/max-zone-map check, not a scan; semantics are identical.
 
     ``predicate(df) -> Column`` selects rows to update; ``apply_update(df)
@@ -1115,8 +1199,10 @@ def update_copy_on_write(spark: SparkSession, root: str, predicate, apply_update
     # column error; rewritten files are upgraded to the union schema.
     union_schema = read_version(spark, root, base, merge_schema=True).schema
     version = base + 1
-    stage = os.path.join(_data_dir(root), f"v{version}")
-    os.makedirs(stage, exist_ok=True)
+    # an attempt directory of its own, as in ``_stage``: the cleanup below
+    # must not delete the files of a writer that won version N
+    stage = os.path.join(_data_dir(root), f"v{version}", uuid.uuid4().hex[:12])
+    os.makedirs(stage)
     kept, new_entries, n_updated = [], [], 0
     # Any failure before the manifest publishes (including losing the CAS
     # race below) must reclaim the staged rewrites — vacuum() only walks
@@ -1139,20 +1225,13 @@ def update_copy_on_write(spark: SparkSession, root: str, predicate, apply_update
             final_name = f"rw{i}.parquet"
             os.replace(os.path.join(tmp, part), os.path.join(stage, final_name))
             shutil.rmtree(tmp)
-            new_entries.append(os.path.join(f"v{version}", final_name))
+            new_entries.append(os.path.relpath(os.path.join(stage, final_name), _data_dir(root)))
         manifest = {
             "version": version,
             "mode": "update",
             "files": sorted(kept + new_entries),
         }
-        final = os.path.join(_log_dir(root), f"v{version}.json")
-        fd, tmpf = tempfile.mkstemp(dir=_log_dir(root), suffix=".tmp")
-        with os.fdopen(fd, "w") as fh:
-            json.dump(manifest, fh)
-        if os.path.exists(final):
-            os.unlink(tmpf)
-            raise VersionConflict(f"v{version} already committed")
-        os.rename(tmpf, final)
+        _publish(root, manifest, m, union_schema)
     except BaseException:
         shutil.rmtree(stage, ignore_errors=True)
         raise

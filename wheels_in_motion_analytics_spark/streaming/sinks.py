@@ -55,6 +55,7 @@ import os  # noqa: E402
 import pyspark.sql.functions as F  # noqa: E402
 
 from wheels_in_motion_analytics_spark.registry import register  # noqa: E402
+from wheels_in_motion_analytics_spark.sources import versioned  # noqa: E402
 
 _SU_KEY_MOD = 23  # keep ~1/23 of orders as CDC keys
 _SU_V2_MOD = 3  # keys with o_orderkey % 3 != 0 receive a second version
@@ -67,9 +68,10 @@ _SU_V2_MOD = 3  # keys with o_orderkey % 3 != 0 receive a second version
     "(version-1 'P' placeholder rows, then version-2 finals for 2/3 of the "
     "keys, staged as separate files) runs through foreachBatch under "
     "trigger availableNow with maxFilesPerTrigger=1, and EVERY micro-batch "
-    "is applied to a parquet target via the keyed MERGE from sources/cdc.py "
-    "(max-version-per-key within the batch first, then merge; batch-ledger "
-    "exactly-once guard). Because the merge keeps the highest version per "
+    "is applied to a versioned target via the keyed MERGE from sources/cdc.py "
+    "(one merge commit per batch that records the batch id — the "
+    "exactly-once guard; the first batch becomes the table's first "
+    "version). Because the merge keeps the highest version per "
     "key, the final table state is independent of micro-batch boundaries — "
     "which is what makes a streaming SINK value-hash-comparable to a batch "
     "SQL oracle. The batch handler is the same merge the batch CDC "
@@ -95,12 +97,11 @@ def run_stream_upsert(
 ) -> DataFrame:
     """Core of ``stream_upsert_foreachbatch``, parameterized on the
     micro-batch split so tests can assert the final state is identical for
-    one-file-per-batch vs everything-in-one-batch."""
-    import os
+    one-file-per-batch vs everything-in-one-batch. Each micro-batch is one
+    merge commit on the versioned table at ``target``; there is no seed
+    write — the first batch's merge creates the table."""
+    import shutil
     import tempfile
-
-    import pyspark.sql.functions as F
-    from pyspark.sql import Window
 
     from wheels_in_motion_analytics_spark.sources.cdc import merge_upsert
     from wheels_in_motion_analytics_spark.tables import table
@@ -130,22 +131,15 @@ def run_stream_upsert(
     # stream applies them as separate micro-batches
     v1.coalesce(1).write.mode("overwrite").parquet(os.path.join(stage, "f1"))
     v2.coalesce(1).write.mode("overwrite").parquet(os.path.join(stage, "f2"))
-    # empty base state (schema only) so the first merge has a target
-    v1.limit(0).write.mode("overwrite").parquet(os.path.join(target, "data"))
 
     schema = "order_id BIGINT, status STRING, total_price DOUBLE, version INT"
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        w = Window.partitionBy("order_id").orderBy(F.col("version").desc())
-        dedup = (
-            batch_df.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
-            .drop("__rn")
-        )
+        # the merge's per-key winner also dedups keys within the batch
         merge_upsert(
             batch_df.sparkSession,
             target,
-            dedup,
+            batch_df,
             ["order_id"],
             "version",
             f"stream-batch-{batch_id}",
@@ -166,13 +160,7 @@ def run_stream_upsert(
         raise TimeoutError("availableNow upsert stream did not finish in 300s")
     # materialize the final state, then reclaim the staged copies — each
     # bench/driver invocation would otherwise leak three temp dirs
-    import shutil
-
-    final = (
-        spark.read.schema(schema)  # table schema is declared above — no inference job
-        .parquet(os.path.join(target, "data"))
-        .localCheckpoint()
-    )
+    final = versioned.read_version(spark, target).localCheckpoint()
     for d in (stage, target, ckpt):
         shutil.rmtree(d, ignore_errors=True)
     return final
@@ -282,6 +270,28 @@ def stream_ingest_versioned_table(spark: SparkSession, sf_dir: str) -> DataFrame
 _FO_KEY_MOD = 13
 
 
+def fold_type_totals(root: str, batch_df: DataFrame, batch_id: str) -> bool:
+    """Fold one micro-batch's per-``event_type`` (count, cents) into the
+    running totals held as a versioned table at ``root``: one commit that
+    records ``batch_id``. Returns False (no-op) if the id is already
+    recorded, so a replayed foreachBatch id cannot double-count."""
+    base, head = versioned.head(root)
+    if batch_id in head.get("batch_ids", ()):
+        return False
+    rows = batch_df.select(
+        "event_type",
+        F.lit(1).cast("bigint").alias("n"),
+        F.col("cents").cast("bigint").alias("c"),
+    )
+    if base:
+        rows = versioned.read_version(batch_df.sparkSession, root, base).unionByName(rows)
+    totals = rows.groupBy("event_type").agg(
+        F.sum("n").cast("bigint").alias("n"), F.sum("c").cast("bigint").alias("c")
+    )
+    versioned.commit(totals, root, mode="overwrite", expected_version=base, batch_id=batch_id)
+    return True
+
+
 @register(
     "stream_fanout_two_sinks",
     category="streaming",
@@ -289,7 +299,8 @@ _FO_KEY_MOD = 13
     "foreachBatch writes every micro-batch to TWO destinations — a "
     "partitioned parquet mirror (idempotent per-batch overwrite into a "
     "batch=<id> subdir: replays rewrite, never duplicate) and a running "
-    "per-type aggregate folded through the keyed MERGE. The result joins "
+    "per-type aggregate folded by one versioned commit per batch that "
+    "records the batch id (replays are no-ops). The result joins "
     "both destinations and PROVES they agree: per event type, the "
     "mirror's recount vs the merged running totals, with match verdicts. "
     "This is the consistency contract a dual-write pipeline (lake mirror "
@@ -314,7 +325,6 @@ def stream_fanout_two_sinks(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from wheels_in_motion_analytics_spark.sources.cdc import merge_upsert
     from wheels_in_motion_analytics_spark.tables import table
 
     ev = (
@@ -334,44 +344,14 @@ def stream_fanout_two_sinks(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.where(F.col("event_id") % 3 == part).coalesce(1).write.mode(
             "overwrite"
         ).parquet(os.path.join(stage, f"f{part}"))
-    # empty keyed state (schema only) so the first merge has a target
-    ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("cents").cast("bigint").alias("c"),
-    ).limit(0).write.mode("overwrite").parquet(os.path.join(state, "data"))
-
-    _state_schema = "event_type STRING, n BIGINT, c BIGINT"
 
     def fanout(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
         # sink 1: idempotent lake mirror — replays overwrite their own dir
         batch_df.write.mode("overwrite").parquet(
             os.path.join(mirror, f"batch={batch_id}")
         )
-        # sink 2: running per-type totals folded via the keyed MERGE
-        # (declared state schema: no footer-inference job per micro-batch)
-        prev = sess.read.schema(_state_schema).parquet(os.path.join(state, "data"))
-        delta = batch_df.groupBy("event_type").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum("cents").cast("bigint").alias("c"),
-        )
-        merged = (
-            prev.select(
-                F.col("event_type"), F.col("n").alias("pn"), F.col("c").alias("pc")
-            )
-            .join(delta, "event_type", "full_outer")
-            .select(
-                "event_type",
-                (F.coalesce(F.col("pn"), F.lit(0)) + F.coalesce(F.col("n"), F.lit(0)))
-                .cast("bigint")
-                .alias("n"),
-                (F.coalesce(F.col("pc"), F.lit(0)) + F.coalesce(F.col("c"), F.lit(0)))
-                .cast("bigint")
-                .alias("c"),
-            )
-            .localCheckpoint()  # read-modify-overwrite guard (NOTES #6)
-        )
-        merged.write.mode("overwrite").parquet(os.path.join(state, "data"))
+        # sink 2: running per-type totals, one commit per batch id
+        fold_type_totals(state, batch_df, str(batch_id))
 
     q = (
         spark.readStream.schema("event_id BIGINT, event_type STRING, cents BIGINT")
@@ -394,7 +374,7 @@ def stream_fanout_two_sinks(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("cents").cast("bigint").alias("mirror_cents"),
         )
     )
-    st = spark.read.schema(_state_schema).parquet(os.path.join(state, "data")).select(
+    st = versioned.read_version(spark, state).select(
         "event_type",
         F.col("n").alias("state_events"),
         F.col("c").alias("state_cents"),
